@@ -49,7 +49,7 @@ final class ExportBatch(h: Harness, n: Long, warmRecords: Long, warmOps: Int,
   private val writerFiles = scala.collection.mutable.ArrayBuffer.empty[Double]
   private val writerBytes = scala.collection.mutable.ArrayBuffer.empty[Double]
 
-  override def minOps: Int = 4
+  override def minOps: Int = 6
 
   /** Writes the timed snapshot and a small one for the warm-up exports
     * (records past the timed ones). */
@@ -223,8 +223,7 @@ final class ExportBatch(h: Harness, n: Long, warmRecords: Long, warmOps: Int,
       "export.unattributed_s" -> (exportS - attributed),
       "core.construct_s" -> constructS) ++ streamPhase()
     (layer, Map("ladder_rungs_s" -> rungs.toMap, "export_s" -> exportS,
-      "ladder_attributed_s" -> attributed,
-      "unattributed_s" -> (exportS - attributed)))
+      "ladder_attributed_s" -> attributed))
   }
 
   /** Micro-batches of cells past the two snapshots' records. */

@@ -4,9 +4,10 @@
     python3 perfbench/run.py --workload <name> --seed <n> --seconds <s> --trace <0|1>
 
 Run from the root of a checkout. It builds the program from the
-checkout's sources together with the benchmark driver (perfbench/src)
-with sbt, once per source state, then runs the driver on a
-local[nproc] Spark session. Workload parameters and the map of which
+checkout's sources together with the benchmark harness (perfbench/src)
+with sbt, once per source state, against the jars of the Spark
+distribution in $SPARK_HOME (or the one whose spark-submit is on PATH),
+then runs the harness on a local[nproc] Spark session. Workload parameters and the map of which
 end-to-end metric each per-layer metric should move are in
 perfbench/workloads.json; the metric names and units are those of
 BENCHMARK.json. The last line of stdout is the result:
@@ -64,8 +65,17 @@ def source_stamp():
     return h.hexdigest()
 
 
+def spark_jars():
+    home = os.environ.get("SPARK_HOME")
+    if not home and shutil.which("spark-submit"):
+        home = str(Path(shutil.which("spark-submit")).resolve().parent.parent)
+    if not home or not (Path(home) / "jars").is_dir():
+        die("no Spark distribution found: set SPARK_HOME")
+    return Path(home) / "jars"
+
+
 def build():
-    """Compiles program + driver with sbt unless this source state was
+    """Compiles program + harness with sbt unless this source state was
     built already; returns the runtime classpath."""
     stamp = source_stamp()
     stamp_file, cp_file = BUILD / "stamp.txt", BUILD / "classpath.txt"
@@ -79,10 +89,11 @@ def build():
         if repos.exists():
             opts += ["-Dsbt.override.build.repos=true", f"-Dsbt.repository.config={repos}"]
         env["SBT_OPTS"] = " ".join(opts)
-    log("building the program and the benchmark driver with sbt")
+    log("building the program and the benchmark harness with sbt")
     try:
         p = subprocess.run(
-            ["sbt", "--batch", "-Dsbt.log.noformat=true", "compile",
+            ["sbt", "--batch", "-Dsbt.log.noformat=true",
+             f"-Dperfbench.sparkJars={spark_jars()}", "compile",
              "export Runtime/fullClasspath"],
             cwd=BENCH, env=env, stdout=subprocess.PIPE, stderr=subprocess.STDOUT,
             stdin=subprocess.DEVNULL, text=True, timeout=850)
@@ -98,7 +109,7 @@ def build():
     return lines[-1].strip()
 
 
-def run_driver(classpath, args, params, run_dir):
+def run_harness(classpath, args, params, run_dir):
     cpus = len(os.sched_getaffinity(0))
     tmp = run_dir / "tmp"
     tmp.mkdir(parents=True)
@@ -126,9 +137,9 @@ def run_driver(classpath, args, params, run_dir):
     except subprocess.TimeoutExpired:
         os.killpg(proc.pid, signal.SIGKILL)
         proc.wait()
-        die("driver timed out")
+        die("benchmark JVM timed out")
     if proc.returncode != 0:
-        die(f"driver exited with {proc.returncode}")
+        die(f"benchmark JVM exited with {proc.returncode}")
     return json.loads((run_dir / "result.json").read_text())
 
 
@@ -202,11 +213,11 @@ def main():
     shutil.rmtree(run_dir, ignore_errors=True)
     run_dir.mkdir(parents=True)
     try:
-        res = run_driver(classpath, args, params, run_dir)
+        res = run_harness(classpath, args, params, run_dir)
         failed, correct = res["failed"], res["correct"]
         for e in res["errors"]:
             log(f"check failed: {e}")
-        log("driver finished")
+        log("benchmark JVM finished")
         if res["oracle"]:
             bad = oracle_check(res["oracle"])
             log("oracle checks finished")

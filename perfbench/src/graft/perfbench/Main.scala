@@ -3,7 +3,7 @@ package graft.perfbench
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-/** Benchmark driver, launched by `perfbench/run.py`:
+/** Benchmark harness, launched by `perfbench/run.py`:
   *
   * {{{
   *   Main --workload <name> --seed <n> --seconds <s> --trace <0|1>

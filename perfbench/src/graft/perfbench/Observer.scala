@@ -18,7 +18,7 @@ final class Counters {
   val jobs, stages, tasks = new LongAdder
   val runMs, cpuNs, gcMs = new LongAdder
   val shuffleWriteBytes, spillBytes, recordsRead = new LongAdder
-  val actions, analysisMs, optimizationMs, planningMs, execNs = new LongAdder
+  val analysisMs, optimizationMs, planningMs, execNs = new LongAdder
   val peakExecMem = new AtomicLong
 
   def snapshot(): Map[String, Double] = Map(
@@ -29,7 +29,6 @@ final class Counters {
     "shuffle_write_bytes" -> shuffleWriteBytes.sum.toDouble,
     "spill_bytes" -> spillBytes.sum.toDouble,
     "records_read" -> recordsRead.sum.toDouble,
-    "actions" -> actions.sum.toDouble,
     "analysis_s" -> analysisMs.sum / 1e3,
     "optimization_s" -> optimizationMs.sum / 1e3,
     "planning_s" -> planningMs.sum / 1e3, "exec_s" -> execNs.sum / 1e9,
@@ -41,8 +40,8 @@ final class Counters {
 final case class Span(id: Long, name: String, startUs: Long, endUs: Long,
     parent: Long)
 
-/** In-memory span recorder. Driver-side spans nest through a stack on
-  * the driver thread; the span id is also set as a Spark local
+/** In-memory span recorder. Spans of calls on the calling thread nest
+  * through a stack; the span id is also set as a Spark local
   * property so that the jobs a call submits are parented to it. */
 final class Tracer(spark: SparkSession, val runId: String) {
   private val nextId = new AtomicLong(1)
@@ -109,7 +108,7 @@ object Tracer {
 }
 
 /** Attaches to the session as both a SparkListener (jobs, stages,
-  * tasks and their metrics) and a QueryExecutionListener (driver
+  * tasks and their metrics) and a QueryExecutionListener (planning
   * phases of every action). With a tracer set, Spark jobs, stages and
   * tasks are also recorded as spans, parented through the local
   * property the tracer sets before each call. */
@@ -184,7 +183,6 @@ final class Observer(spark: SparkSession) extends SparkListener
 
   override def onSuccess(funcName: String, qe: QueryExecution,
       durationNs: Long): Unit = {
-    counters.actions.increment()
     counters.execNs.add(durationNs)
     val phases = qe.tracker.phases
     def ms(k: String): Long =

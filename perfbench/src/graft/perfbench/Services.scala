@@ -19,7 +19,7 @@ object ServiceCounters {
     "control_s" -> controlNs.sum / 1e9,
     "messages" -> messages.sum.toDouble)
 
-  /** Times one driver-side control call, as a span when tracing. */
+  /** Times one control-plane call, as a span when tracing. */
   def control[A](tracer: Option[Tracer], name: String)(body: => A): A = {
     val t0 = System.nanoTime()
     try tracer.fold(body)(_.span(name)(body))

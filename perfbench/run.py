@@ -66,12 +66,17 @@ def source_stamp():
 
 
 def spark_jars():
-    home = os.environ.get("SPARK_HOME")
-    if not home and shutil.which("spark-submit"):
-        home = str(Path(shutil.which("spark-submit")).resolve().parent.parent)
-    if not home or not (Path(home) / "jars").is_dir():
-        die("no Spark distribution found: set SPARK_HOME")
-    return Path(home) / "jars"
+    """The jars of $SPARK_HOME, else of the first spark-submit on PATH
+    that sits in a Spark distribution."""
+    homes = [os.environ.get("SPARK_HOME", "")]
+    for d in os.environ.get("PATH", "").split(os.pathsep):
+        submit = Path(d or ".") / "spark-submit"
+        if submit.is_file():
+            homes.append(str(submit.resolve().parent.parent))
+    for home in homes:
+        if home and (Path(home) / "jars").is_dir():
+            return Path(home) / "jars"
+    die("no Spark distribution found: set SPARK_HOME")
 
 
 def build():

@@ -32,7 +32,8 @@ import time
 from pathlib import Path
 
 T0 = time.monotonic()
-DEADLINE_S = 175
+# a run must end within 180 s, or 900 s when it also builds
+RUN_S, BUILD_RUN_S, BUILD_S = 170, 890, 700
 BENCH = Path(__file__).resolve().parent
 ROOT = BENCH.parent
 BUILD = ROOT / ".bench_build" / "perfbench"
@@ -95,17 +96,20 @@ def build():
             opts += ["-Dsbt.override.build.repos=true", f"-Dsbt.repository.config={repos}"]
         env["SBT_OPTS"] = " ".join(opts)
     log("building the program and the benchmark harness with sbt")
+    p = subprocess.Popen(
+        ["sbt", "--batch", "-Dsbt.log.noformat=true",
+         f"-Dperfbench.sparkJars={spark_jars()}", "compile",
+         "export Runtime/fullClasspath"],
+        cwd=BENCH, env=env, stdout=subprocess.PIPE, stderr=subprocess.STDOUT,
+        stdin=subprocess.DEVNULL, text=True, start_new_session=True)
     try:
-        p = subprocess.run(
-            ["sbt", "--batch", "-Dsbt.log.noformat=true",
-             f"-Dperfbench.sparkJars={spark_jars()}", "compile",
-             "export Runtime/fullClasspath"],
-            cwd=BENCH, env=env, stdout=subprocess.PIPE, stderr=subprocess.STDOUT,
-            stdin=subprocess.DEVNULL, text=True, timeout=850)
+        out, _ = p.communicate(timeout=BUILD_S)
     except subprocess.TimeoutExpired:
+        os.killpg(p.pid, signal.SIGKILL)
+        p.wait()
         die("sbt build timed out")
-    sys.stderr.write("\n".join(l for l in p.stdout.splitlines() if ".jar" not in l) + "\n")
-    lines = [l for l in p.stdout.splitlines() if ".jar" in l and not l.startswith("[")]
+    sys.stderr.write("\n".join(l for l in out.splitlines() if ".jar" not in l) + "\n")
+    lines = [l for l in out.splitlines() if ".jar" in l and not l.startswith("[")]
     if p.returncode != 0 or not lines:
         die(f"sbt build failed (exit {p.returncode})")
     BUILD.mkdir(parents=True, exist_ok=True)
@@ -137,8 +141,9 @@ def run_harness(classpath, args, params, run_dir):
     env = {k: v for k, v in os.environ.items() if not k.startswith("SPARK_GRAFT")}
     proc = subprocess.Popen(cmd, cwd=run_dir, env=env, stdout=sys.stderr,
                             stdin=subprocess.DEVNULL, start_new_session=True)
+    started = time.monotonic()
     try:
-        proc.wait(timeout=max(10, DEADLINE_S - (time.monotonic() - T0)))
+        proc.wait(timeout=min(RUN_S, BUILD_RUN_S - (started - T0)))
     except subprocess.TimeoutExpired:
         os.killpg(proc.pid, signal.SIGKILL)
         proc.wait()

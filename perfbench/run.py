@@ -212,11 +212,11 @@ def main():
     contract = json.loads((ROOT / "BENCHMARK.json").read_text())
     if args.workload not in spec["workloads"]:
         die(f"unknown workload {args.workload}", 2)
-    w = spec["workloads"][args.workload]
-    params = {k: v for k, v in w["params"].items() if k != "queries"}
-    if "queries" in w["params"]:
-        params["queries"] = ",".join(f"{f}:{q}" for f, qs in w["params"]["queries"].items()
+    params = dict(spec["workloads"][args.workload]["params"])
+    if "queries" in params:
+        params["queries"] = ",".join(f"{f}:{q}" for f, qs in params["queries"].items()
                                      for q in qs)
+    measured_on = {m: g["measured_on"] for g in spec["per_layer"] for m in g["metrics"]}
 
     classpath = build()
     run_dir = ROOT / ".perfbench_run" / f"{args.workload}-{args.seed}-{os.getpid()}"
@@ -245,7 +245,7 @@ def main():
     if args.trace:
         measured = res["per_layer"]
         for m in contract["per_layer"]:
-            if args.workload in spec["per_layer"][m["name"]]["measured_on"]:
+            if args.workload in measured_on[m["name"]]:
                 if m["name"] not in measured:
                     die(f"per-layer metric {m['name']} was not measured")
                 v = measured[m["name"]]

@@ -37,13 +37,13 @@ final class Cells(seed: Long) {
 /** `ExportJob.run` over an HFile v2 snapshot of `n` seeded cells
   * (4 regions, one generation, gz blocks), full snapshot, gz objects.
   * The traced run adds the stage ladder and a streaming phase: the same
-  * pipeline and writer fed as micro-batches (see [[ExportStream]]). */
-final class ExportBatch(h: Harness, n: Long, warmRecords: Long, warmOps: Int,
-    stream: StreamParams) extends Workload {
+  * pipeline and writer fed as micro-batches of `streamBatch` cells
+  * (see [[ExportStream]]). */
+final class ExportBatch(h: Harness, n: Long, streamBatch: Int) extends Workload {
+  import ExportBatch._
   private val spark = h.spark
   private val cells = new Cells(h.seed)
   private val snapshot = h.runDir.resolve("snapshot")
-  private val warmSnapshot = h.runDir.resolve("snapshot-warm")
   private var inBytes = 0L
   private var reference: String = _
   private val writerFiles = scala.collection.mutable.ArrayBuffer.empty[Double]
@@ -51,26 +51,20 @@ final class ExportBatch(h: Harness, n: Long, warmRecords: Long, warmOps: Int,
 
   override def minOps: Int = 6
 
-  /** Writes the timed snapshot and a small one for the warm-up exports
-    * (records past the timed ones). */
-  override def setup(rep: Int): Unit = {
-    inBytes = writeSnapshot(snapshot, 0, n)
-    writeSnapshot(warmSnapshot, n, n + warmRecords)
-  }
-
-  private def writeSnapshot(dir: Path, from: Long, until: Long): Long = {
-    h.deleteTree(dir)
-    Files.createDirectories(dir)
-    val all = cells.cells(from, until)
+  /** Writes the snapshot; `inBytes` is its cells' row keys and values. */
+  override def setup(): Unit = {
+    h.deleteTree(snapshot)
+    Files.createDirectories(snapshot)
+    val all = cells.cells(0, n)
     all.groupBy(c => (c.hbase_id(0) & 0xff) / 64).toSeq.par.foreach { case (r, cs) =>
       val sorted = cs.sortWith((a, b) =>
         java.util.Arrays.compareUnsigned(a.hbase_id, b.hbase_id) < 0)
-      HFileV2Writer.writeCells(dir.resolve(f"region-r$r%03d-g000.hfile"),
+      HFileV2Writer.writeCells(snapshot.resolve(f"region-r$r%03d-g000.hfile"),
         sorted.iterator.map(c =>
           HFileCell(c.hbase_id, c.ts, c.value.getBytes("UTF-8"))),
         HFileShape(codec = HFileV2Format.CodecGz), seqId = 0L)
     }
-    all.map(c => c.hbase_id.length.toLong + c.value.getBytes("UTF-8").length).sum
+    inBytes = all.map(c => c.hbase_id.length.toLong + c.value.getBytes("UTF-8").length).sum
   }
 
   private def source(dir: Path)(s: SparkSession): DataFrame =
@@ -87,15 +81,14 @@ final class ExportBatch(h: Harness, n: Long, warmRecords: Long, warmOps: Int,
     (cfg, writerCfg)
   }
 
-  /** One export of the timed snapshot (or of the warm-up one) plus its
-    * checks; returns whether every check held. */
-  private def exportOnce(i: Int, warm: Boolean): Boolean = {
+  /** One export of the snapshot plus its checks; returns whether every
+    * check held. */
+  private def exportOnce(i: Int): Boolean = {
     val out = h.runDir.resolve(s"export-$i")
     val (cfg, writerCfg) = configs(out)
     val noSleep: Long => Unit = _ => ()
     val t = h.tracer
-    val result = ExportJob.run(spark, source(if (warm) warmSnapshot else snapshot),
-      cfg, writerCfg,
+    val result = ExportJob.run(spark, source(snapshot), cfg, writerCfg,
       new CountingKeyService(Fixture.keyService),
       new CountingStatusService(new Control.InMemoryStatusService, t),
       new CountingProductStatus(
@@ -104,14 +97,11 @@ final class ExportBatch(h: Harness, n: Long, warmRecords: Long, warmOps: Int,
         new CountingSqs(new Completion.RecordingSqs, t), sleeper = noSleep),
       new Completion.SnsPublishingService(cfg,
         new CountingSns(new Completion.RecordingSns, t), sleeper = noSleep))
-    try {
-      if (warm) check(i, result, out, n, n + warmRecords)
-      else check(i, result, out, 0, n)
-    } finally h.deleteTree(out)
+    try check(i, result, out)
+    finally h.deleteTree(out)
   }
 
-  private def check(i: Int, r: ExportJob.Result, out: Path, from: Long,
-      until: Long): Boolean = {
+  private def check(i: Int, r: ExportJob.Result, out: Path): Boolean = {
     def bad(msg: String): Boolean = { h.fail(s"export $i: $msg"); false }
     val written = r.files.map(_.records).sum
     val typed = r.skips - "ok"
@@ -133,35 +123,36 @@ final class ExportBatch(h: Harness, n: Long, warmRecords: Long, warmOps: Int,
       md.update(Files.readAllBytes(p))
     }
     val digest = md.digest().map("%02x".format(_)).mkString
-    if (from == 0) {
-      writerFiles += r.files.size.toDouble
-      writerBytes += all.map(Files.size).sum.toDouble
-    }
+    writerFiles += r.files.size.toDouble
+    writerBytes += all.map(Files.size).sum.toDouble
     if (!r.outcome.completed || r.failure.isDefined)
       bad(s"outcome ${r.outcome} ${r.failure}")
     else if (r.completionStatus != Control.ExportCompletionStatus.CompletedSuccessfully)
       bad(s"completion status ${r.completionStatus}")
     else if (r.skips.getOrElse("ok", -1L) != written)
       bad(s"skip summary ok=${r.skips.get("ok")} but $written records written")
-    else if (written + typed.values.sum != until - from)
-      bad(s"records do not conserve: read ${until - from}, written $written, skipped $typed")
-    else if (typed != cells.expectedSkips(from, until))
-      bad(s"typed skips $typed, seeded ${cells.expectedSkips(from, until)}")
+    else if (written + typed.values.sum != n)
+      bad(s"records do not conserve: read $n, written $written, skipped $typed")
+    else if (typed != cells.expectedSkips(0, n))
+      bad(s"typed skips $typed, seeded ${cells.expectedSkips(0, n)}")
     else if (manifestLines != written)
       bad(s"$manifestLines manifest lines for $written records")
-    else if (from == 0 && reference != null && digest != reference)
+    else if (reference != null && digest != reference)
       bad("files or manifests differ from the first export's")
     else {
-      if (from == 0 && reference == null) reference = digest
+      if (reference == null) reference = digest
       true
     }
   }
 
   override def warm(): Unit =
-    (0 until warmOps).foreach(i =>
-      h.op("export-warm")((exportOnce(-1 - i, warm = true), warmRecords.toDouble)))
+    (0 until WarmOps).foreach(i => h.op("export-warm")((exportOnce(-1 - i), n.toDouble)))
 
-  override def op(i: Int): Op = h.op("export")((exportOnce(i, warm = false), n.toDouble))
+  override def op(i: Int): Op = h.op("export")((exportOnce(i), n.toDouble))
+
+  /** Object, metadata and manifest bytes on disk per byte of source
+    * cell (row key and value). */
+  override def outBytesPerInByte: Double = Stats.median(writerBytes.toSeq) / inBytes
 
   override def perLayer(ops: Seq[Op]): Map[String, Double] = {
     val ok = ops.filter(_.ok)
@@ -172,7 +163,6 @@ final class ExportBatch(h: Harness, n: Long, warmRecords: Long, warmOps: Int,
       "keys.unwrap_calls" -> m("svc.unwrap_calls"),
       "writer.files" -> Stats.median(writerFiles.toSeq),
       "writer.out_bytes" -> Stats.median(writerBytes.toSeq),
-      "writer.out_bytes_per_in_byte" -> Stats.median(writerBytes.toSeq) / inBytes,
       "writer.shuffle_write_bytes" -> m("shuffle_write_bytes"),
       "control.fanout_s" -> m("svc.control_s"),
       "control.messages" -> m("svc.messages"))
@@ -215,7 +205,7 @@ final class ExportBatch(h: Harness, n: Long, warmRecords: Long, warmOps: Int,
       })
     val stages = rungs.zip(0.0 +: rungs.map(_._2)).map { case ((k, t), prev) => k -> (t - prev) }
     val skipS = best("ladder.skip_summary")(ExportPipeline.skipSummary(out).collect())
-    val exportS = Stats.endToEnd(Nil, ops)("pass_s")
+    val exportS = Stats.endToEnd(ops)("pass_s")
     val fanout = perLayer(ops)("control.fanout_s")
     val attributed = rungs.last._2 + skipS + fanout
     val layer = stages.toMap ++ Map(
@@ -226,13 +216,13 @@ final class ExportBatch(h: Harness, n: Long, warmRecords: Long, warmOps: Int,
       "ladder_attributed_s" -> attributed))
   }
 
-  /** Micro-batches of cells past the two snapshots' records. */
+  /** Micro-batches of cells past the snapshot's records. */
   private def streamPhase(): Map[String, Double] = {
-    val s = new ExportStream(h, cells, n + warmRecords, stream.batch, stream.batches)
+    val s = new ExportStream(h, cells, n, streamBatch, StreamBatches)
     val ops = try {
-      (0 until stream.warmOps).foreach(_ => s.feed())
+      (0 until StreamWarmOps).foreach(_ => s.feed())
       s.progress.clear()
-      (0 until stream.ops).map(_ => s.feed())
+      (0 until StreamOps).map(_ => s.feed())
     } finally s.close()
     val ok = ops.filter(_.ok)
     def p(k: String) = Stats.median(s.progress.toSeq.map(_.getOrElse(k, 0.0)))
@@ -246,4 +236,18 @@ final class ExportBatch(h: Harness, n: Long, warmRecords: Long, warmOps: Int,
   }
 }
 
-final case class StreamParams(batch: Int, batches: Int, warmOps: Int, ops: Int)
+object ExportBatch {
+  /** Untimed exports before the timed ones: the first loads classes
+    * and takes several times as long as a warm one; the second is
+    * still slower than those that follow while the JIT compiles the
+    * per-record paths. */
+  val WarmOps = 2
+  /** Distinct micro-batches the stream cycles through; together they
+    * are built once, before the stream starts. */
+  val StreamBatches = 16
+  /** Untimed micro-batches: the first few carry the stream's start-up
+    * (state store, first plans, JIT). */
+  val StreamWarmOps = 6
+  /** Timed micro-batches, of which the stream metrics are medians. */
+  val StreamOps = 10
+}

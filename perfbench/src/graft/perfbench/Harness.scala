@@ -19,7 +19,7 @@ trait Workload {
   def minOps: Int
   /** Operations in one pass; a window ends on a pass boundary. */
   def passOps: Int = 1
-  def setup(rep: Int): Unit
+  def setup(): Unit
   def warm(): Unit
   def op(i: Int): Op
   /** Per-layer metrics from the untraced timed operations. */
@@ -30,6 +30,8 @@ trait Workload {
     (Map.empty, Map.empty)
   /** Queries whose verified output the runner checks against DuckDB. */
   def oracle: Seq[Map[String, Any]] = Nil
+  /** Bytes one pass writes per byte of the input it reads. */
+  def outBytesPerInByte: Double
 }
 
 final class Harness(val spark: SparkSession, val observer: Observer,
@@ -115,19 +117,18 @@ object Stats {
 
   def mean(xs: Seq[Double]): Double = if (xs.isEmpty) 0.0 else xs.sum / xs.size
 
-  /** The end-to-end metrics, computed alike for every workload from
-    * its successful timed operations. A pass is one operation of each
-    * name (one export, or every query once); its time and input are
-    * sums over names. Each name's time is its best repetition in the
+  /** The end-to-end time and throughput metrics, computed alike for
+    * every workload from its successful timed operations. A pass is
+    * one operation of each name (one export, or every query once); its
+    * time and input are sums over names. Each name's time is its best repetition in the
     * run: on a shared machine noise only adds time (CPU steal comes in
     * bursts), so the best of k estimates the program's own time, and
     * the median over runs handles what is left. */
-  def endToEnd(setupS: Seq[Double], ops: Seq[Op]): Map[String, Double] = {
+  def endToEnd(ops: Seq[Op]): Map[String, Double] = {
     val byName = ops.filter(_.ok).groupBy(_.name).values.toSeq
     val ms = byName.map(v => v.map(_.ns / 1e6).min)
     val passS = ms.sum / 1e3
     Map(
-      "setup_s" -> median(setupS),
       "pass_s" -> passS,
       "op_geomean_ms" ->
         (if (ms.isEmpty) 0.0 else math.exp(ms.map(math.log).sum / ms.size)),

@@ -7,7 +7,8 @@ import java.nio.file.{Files, Paths}
   *
   * {{{
   *   Main --workload <name> --seed <n> --seconds <s> --trace <0|1>
-  *        --run-dir <dir> --cpus <n> [workload parameters]
+  *        --run-dir <dir> --cpus <n> --data-dir <dir>
+  *        [--records <n> --stream-batch <n> | --queries <family:query,...>]
   * }}}
   *
   * Builds the seeded inputs (timed, several times), warms up untimed,
@@ -17,6 +18,10 @@ import java.nio.file.{Files, Paths}
   * Writes `<run-dir>/result.json`; the runner adds the oracle checks
   * and prints the result line. */
 object Main {
+
+  /** Set-up runs this often and reports its median: the first run also
+    * pays class loading and JIT warm-up, which the median leaves out. */
+  private val SetupReps = 3
 
   def main(args: Array[String]): Unit = {
     val opts = args.grouped(2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
@@ -31,10 +36,8 @@ object Main {
     val h = new Harness(spark, observer, runDir, opt("seed").toLong,
       opt("seconds").toDouble)
     val w: Workload = workload match {
-      case "export_batch" => new ExportBatch(h, opt("records").toLong,
-        opt("warm-records").toLong, opt("warm-ops").toInt,
-        StreamParams(opt("stream-batch").toInt, opt("stream-batches").toInt,
-          opt("stream-warm-ops").toInt, opt("stream-ops").toInt))
+      case "export_batch" =>
+        new ExportBatch(h, opt("records").toLong, opt("stream-batch").toInt)
       case "queries" =>
         val fam = opt("queries").split(",").map { e =>
           val Array(f, q) = e.split(":", 2)
@@ -45,14 +48,16 @@ object Main {
     }
 
     try {
-      val setupS = (0 until opt("setup-reps").toInt).map(r => h.timeS(w.setup(r)))
+      val setupS = (0 until SetupReps).map(_ => h.timeS(w.setup()))
       System.err.println(s"[perfbench] setup ${setupS.mkString(" ")}")
       w.warm()
       observer.counters.peakExecMem.set(0L)
       val ops = h.window(w)
       observer.drain()
       val peakMb = observer.counters.peakExecMem.get / 1048576.0
-      val endToEnd = Stats.endToEnd(setupS, ops) + ("peak_exec_mem_mb" -> peakMb)
+      val endToEnd = Stats.endToEnd(ops) ++ Map(
+        "setup_s" -> Stats.median(setupS), "peak_exec_mem_mb" -> peakMb,
+        "out_bytes_per_in_byte" -> w.outBytesPerInByte)
       var perLayer = Stats.enginePerOp(ops) ++ w.perLayer(ops)
       if (traced) {
         val tracer = new Tracer(spark, s"$workload-${opt("seed")}")
@@ -64,7 +69,7 @@ object Main {
         observer.tracer = null
         h.tracer = None
         val untracedS = endToEnd("pass_s")
-        val tracedS = Stats.endToEnd(Nil, tops)("pass_s")
+        val tracedS = Stats.endToEnd(tops)("pass_s")
         perLayer = perLayer ++ extra ++ Map(
           "trace.overhead_pct" ->
             (if (untracedS > 0) 100.0 * (tracedS / untracedS - 1) else 0.0))

@@ -1,8 +1,12 @@
 package graft.perfbench
 
+import java.nio.file.{Files, Path, Paths}
+
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 import graft.SparkEntry
 
@@ -12,7 +16,10 @@ import graft.SparkEntry
   * reproduce the row count and hash of the output that an untimed
   * first pass wrote as parquet, which the runner checks against the
   * query's `SparkEntry.oracleSql` twin in DuckDB. `families` names the
-  * group each query's time is summed into. */
+  * group each query's time is summed into. A query's input is the
+  * tables at the leaves of its analyzed plan, counted in full: a fixed
+  * property of the workload, which pruning or re-reading does not
+  * change. */
 final class Queries(h: Harness, dataDir: String, names: Seq[String],
     families: Map[String, String]) extends Workload {
   private val spark = h.spark
@@ -22,6 +29,11 @@ final class Queries(h: Harness, dataDir: String, names: Seq[String],
   // operations per query that passed the digest check: the runner
   // counts them as failed if the query's oracle check fails
   private val passed = mutable.Map.empty[String, Int].withDefaultValue(0)
+  // rows and bytes of the tables each query reads, and the bytes of
+  // its verified output
+  private val inRows = mutable.Map.empty[String, Double]
+  private val inBytes = mutable.Map.empty[String, Double]
+  private val outBytes = mutable.Map.empty[String, Double]
   private val verifyDir = h.dir("verify")
   private val tables = Seq("region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
@@ -31,21 +43,56 @@ final class Queries(h: Harness, dataDir: String, names: Seq[String],
 
   /** Loads every input table through the program's table loader and
     * scans it in full. */
-  override def setup(rep: Int): Unit =
+  override def setup(): Unit =
     tables.foreach(t => graft.core.Tables.load(spark, dataDir, t)
       .write.format("noop").mode("overwrite").save())
 
-  /** The untimed first pass: writes each query's output as parquet for
-    * the oracle check and takes its digest from what was written. */
-  override def warm(): Unit = order.foreach { q =>
-    h.op(s"$q-verify") {
-      val out = verifyDir.resolve(q).toString
-      fns(q)(spark, dataDir).write.mode("overwrite").parquet(out)
-      verified(q) = HashSink.digest(spark.read.parquet(out))
-      passed(q) += 1
-      (true, 0.0)
-    }
+  /** The parquet tables at the leaves of a query's analyzed plan,
+    * subqueries included. */
+  private def tablesRead(df: DataFrame): Set[String] =
+    df.queryExecution.analyzed.collectWithSubqueries { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation => r.location.rootPaths }.flatten
+      .map(_.getName.stripSuffix(".parquet")).toSet
+
+  private def dataFiles(dir: Path): Seq[Path] = {
+    val s = Files.walk(dir)
+    try s.iterator().asScala.filter { p =>
+      val f = p.getFileName.toString
+      Files.isRegularFile(p) && !f.startsWith(".") && !f.startsWith("_")
+    }.toSeq
+    finally s.close()
   }
+
+  /** The untimed first pass writes each query's output as parquet for
+    * the oracle check and takes its digest from what was written. A
+    * second untimed pass runs as the timed ones do: queries still get
+    * faster after their first run, while the JIT compiles their paths. */
+  override def warm(): Unit = {
+    val rows = tables.map(t => t -> graft.core.Tables.load(spark, dataDir, t).count()).toMap
+    order.foreach { q =>
+      h.op(s"$q-verify") {
+        val out = verifyDir.resolve(q)
+        val df = fns(q)(spark, dataDir)
+        val read = tablesRead(df)
+        val known = read.nonEmpty && read.subsetOf(rows.keySet)
+        if (!known) h.fail(s"$q reads tables $read, not a subset of $tables")
+        System.err.println(s"[perfbench] $q reads ${read.toSeq.sorted.mkString(",")}")
+        inRows(q) = read.toSeq.map(t => rows.getOrElse(t, 0L).toDouble).sum
+        inBytes(q) = read.toSeq.map(t => dataFiles(Paths.get(dataDir, s"$t.parquet"))
+          .map(Files.size).sum.toDouble).sum
+        df.write.mode("overwrite").parquet(out.toString)
+        outBytes(q) = dataFiles(out).map(Files.size).sum.toDouble
+        verified(q) = HashSink.digest(spark.read.parquet(out.toString))
+        if (known) passed(q) += 1
+        (known, 0.0)
+      }
+    }
+    order.indices.foreach(op)
+  }
+
+  /** Bytes of every query's verified parquet output per byte of the
+    * tables the queries read. */
+  override def outBytesPerInByte: Double = outBytes.values.sum / inBytes.values.sum
 
   override def op(i: Int): Op = {
     val q = order(i % order.size)
@@ -61,8 +108,7 @@ final class Queries(h: Harness, dataDir: String, names: Seq[String],
       else h.fail(s"$q: output $d differs from verified ${verified.get(q).orNull}")
       (ok, 0.0)
     }
-    o.copy(records = o.eng.getOrElse("records_read", 0.0),
-      eng = o.eng + ("construct_s" -> constructS))
+    o.copy(records = inRows.getOrElse(q, 0.0), eng = o.eng + ("construct_s" -> constructS))
   }
 
   override def perLayer(ops: Seq[Op]): Map[String, Double] = {

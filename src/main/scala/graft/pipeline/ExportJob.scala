@@ -22,9 +22,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * SUCCESS in the run-level fold), anything else → Export_Failed.
   *
   * Scale: the driver does gate/status/completion only; scan → pipeline
-  * → writer is one distributed lineage with a single shuffle (the
-  * writer's slice repartition). The per-file loop walks the writer's
-  * accounting rows (one per written file), never record data.
+  * → writer is ONE pass: one job over one distributed lineage with a
+  * single shuffle (the writer's slice repartition). The writer takes
+  * the whole pipeline output, so no `err IS NULL` filter exists for
+  * Catalyst's PushDownPredicates to inline the pipeline's `err` chain
+  * into, and the typed skip counts come back in the sink's commit
+  * messages (one count per committed partition, read from the data)
+  * instead of from a second evaluation. The per-file loop walks the
+  * writer's accounting rows (one per written file), never record data.
   */
 object ExportJob {
 
@@ -69,8 +74,8 @@ object ExportJob {
           cfg.snapshotType)
         // snapshot type flows from cfg into the writer's metadata too
         // (data_product_type): one source of truth end-to-end
-        val written = SnapshotWriter.write(ExportPipeline.records(out),
-          writerCfg.copy(snapshotType = cfg.snapshotType), keys).collect().toSeq
+        val (written, skipCounts) = SnapshotWriter.export(out,
+          writerCfg.copy(snapshotType = cfg.snapshotType), keys)
         // per-file accounting, in the writer's own order
         // (S3StreamingWriter.kt:131-132): count increment + FIFO
         // snapshot-sender message carrying the object's full path
@@ -78,8 +83,6 @@ object ExportJob {
           exportStatus.incrementExportedCount(cfg.topicName)
           messaging.notifySnapshotSender(s"${writerCfg.outputDir}/${fa.file}")
         }
-        val skipCounts = ExportPipeline.skipSummary(out).collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
         (Control.JobOutcome(completed = true), written, skipCounts,
           Option.empty[Throwable])
       } catch {

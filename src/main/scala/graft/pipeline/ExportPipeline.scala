@@ -22,7 +22,9 @@ import org.apache.spark.sql.functions._
   * Skip semantics as data, not exceptions: every stage carries an `err`
   * column forward (`missing:*`, `decrypt_failed`, `bad_decrypted`,
   * `audit_failed` — the typed skip list of JobConfiguration.kt:57-61);
-  * [[records]] / [[skipSummary]] split the stream at the tail. Counts
+  * [[records]] / [[skipSummary]] split the stream at the tail for
+  * queries, and the snapshot sink counts and drops skipped rows in the
+  * export's one write (see [[SnapshotWriter.export]]). Counts
   * read from the data itself, never from accumulators (at-least-once on
   * task retry — SURVEY §7.4 risk 5).
   *
@@ -151,11 +153,17 @@ object ExportPipeline {
         decrypt(Envelope.parse(raw, topic), keys)), snapshotType)),
       topic)
 
-  /** Successfully exported records (the writer's input). */
+  /** Successfully exported records: the query-side view of the
+    * pipeline output (q41 and the specs). [[ExportJob]] does not use
+    * it; its writer takes the whole output ([[SnapshotWriter.export]]),
+    * because Catalyst's PushDownPredicates inlines this filter's `err`
+    * chain, and with it the decrypt and validate work, into the Filter. */
   def records(pipelineOut: DataFrame): DataFrame =
     pipelineOut.filter(col("err").isNull)
 
-  /** Typed skip accounting, read from the data (not accumulators). */
+  /** Typed skip accounting, read from the data (not accumulators): the
+    * query-side view (q41 and the specs). [[ExportJob]] takes the same
+    * counts from its single write ([[SnapshotWriter.export]]). */
   def skipSummary(pipelineOut: DataFrame): DataFrame =
     pipelineOut.groupBy(coalesce(col("err"), lit("ok")).as("outcome"))
       .agg(count(lit(1)).as("n"))

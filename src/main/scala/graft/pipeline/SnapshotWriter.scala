@@ -142,7 +142,8 @@ object SnapshotWriter {
 
   /** Write the pipeline's record output; returns per-file accounting.
     * `records` must carry hbase_id + doc + the m_* manifest columns
-    * (the [[ExportPipeline.records]] shape).
+    * (the [[ExportPipeline.records]] shape). A row with a non-null
+    * `err` is not written; [[export]] also returns the counts.
     *
     * The physical write runs through the DSv2
     * [[graft.sources.SnapshotSink]] `BatchWrite`: the sink DECLARES
@@ -155,14 +156,27 @@ object SnapshotWriter {
   def write(records: DataFrame, cfg: Config, keys: KeyService): Dataset[FileAccounting] =
     writeShaped(shaped(records, cfg), cfg, keys)
 
+  /** The whole pipeline output in one write: the records (rows whose
+    * `err` is null) land as files, and every row is counted under its
+    * outcome — its `err`, or `"ok"` for a written record. Returns the
+    * per-file accounting and those counts, both read from the data the
+    * committed tasks saw, so `outcomes("ok")` equals the records in
+    * the files and a retried task's partial counts never add up. */
+  def export(pipelineOut: DataFrame, cfg: Config,
+      keys: KeyService): (Seq[FileAccounting], Map[String, Long]) =
+    sink(shaped(pipelineOut, cfg), cfg, keys)
+
   /** The sink-input projection of [[write]], exposed so prepared-plan
     * callers ([[graft.core.PreparedTransform]] sinks) can analyze it
-    * once: record relation → (slice, doc, m_*) clustered shape.
+    * once: record relation or pipeline output → (slice, doc, m_*, err)
+    * clustered shape; a relation without `err` is all records.
     * Depends on `cfg` only through `scanWidth`, so one shaped plan
     * serves every batch-scoped output directory. */
   def shaped(records: DataFrame, cfg: Config): DataFrame = {
     val spark = records.sparkSession
     import spark.implicits._
+    val err =
+      if (records.columns.contains("err")) $"err" else lit(null).cast("string")
     // signed first key byte → slice index, columnar:
     // u (0..255) → ((u + 128) % 256) / width == (signedByte + 128) / width
     records
@@ -170,13 +184,18 @@ object SnapshotWriter {
         (pmod(conv(hex(expr("substring(hbase_id, 1, 1)")), 16, 10)
           .cast("int") + 128, lit(256)) / cfg.scanWidth).cast("int"))
       .select($"slice", $"doc", $"m_id", $"m_ts", $"m_db", $"m_collection",
-        $"m_source", $"m_outer", $"m_inner", $"m_original_id")
+        $"m_source", $"m_outer", $"m_inner", $"m_original_id", err.as("err"))
   }
 
   /** Writes an already-[[shaped]] relation through the DSv2 sink. */
   def writeShaped(ds: DataFrame, cfg: Config, keys: KeyService): Dataset[FileAccounting] = {
     val spark = ds.sparkSession
     import spark.implicits._
+    spark.createDataset(sink(ds, cfg, keys)._1)
+  }
+
+  private def sink(ds: DataFrame, cfg: Config,
+      keys: KeyService): (Seq[FileAccounting], Map[String, Long]) = {
     val dek = keys.batchDataKey()
     val writeId = java.util.UUID.randomUUID().toString
     graft.sources.SnapshotSink.register(writeId, cfg, dek)
@@ -184,7 +203,7 @@ object SnapshotWriter {
       ds.write.format("graft.sources.SnapshotSink")
         .option("writeId", writeId)
         .mode("append").save()
-      spark.createDataset(graft.sources.SnapshotSink.takeAccounting(writeId))
+      graft.sources.SnapshotSink.takeCommitted(writeId)
     } finally graft.sources.SnapshotSink.unregister(writeId)
   }
 

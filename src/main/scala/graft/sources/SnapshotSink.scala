@@ -33,9 +33,17 @@ import graft.pipeline.{DataKeyResult, Retry, SnapshotWriter}
   *    [[graft.pipeline.SnapshotWriter.SliceRollingWriter]] streams the
   *    partition through constant memory into the task's PRIVATE
   *    staging dir `<outputDir>/.staging-<writeId>/<task>-<attempt>/`;
-  *    its `WriterCommitMessage` carries the staged file names + the
-  *    per-file accounting. A failed or speculative attempt's files
-  *    sit in a dir nothing ever reads;
+  *    its `WriterCommitMessage` carries the staged file names, the
+  *    per-file accounting and the task's outcome counts. A failed or
+  *    speculative attempt's files and counts sit where nothing ever
+  *    reads them;
+  *  - **skipped rows are counted, never staged**: a row whose `err`
+  *    is set (a typed skip of [[graft.pipeline.ExportPipeline]]) adds
+  *    one to its `err` count and stops there; every other row adds
+  *    one to `"ok"` and goes to the rolling writer. So one evaluation
+  *    of the pipeline output feeds both the files and the skip
+  *    accounting, and the counts come from the data, not from
+  *    accumulators;
   *  - **the driver's `commit()` publishes**: exactly one committed
   *    message per partition (Spark's output-commit coordinator)
   *    has its files moved into the output/manifest dirs — atomically
@@ -44,8 +52,10 @@ import graft.pipeline.{DataKeyResult, Retry, SnapshotWriter}
   *    ([[SnapshotSinkBatchWrite.publish]]) — under the reference's
   *    retry envelope (S3ObjectServiceImpl.kt:19-23), since
   *    publication is the S3-PUT analogue — then the staging root is
-  *    deleted. `abort()` only deletes staging. Guarantee level: a
-  *    consumer can never observe a TORN FILE or an uncommitted
+  *    deleted. The committed messages' outcome counts are summed, so
+  *    each partition's rows are counted exactly once however often
+  *    its task was retried. `abort()` only deletes staging. Guarantee
+  *    level: a consumer can never observe a TORN FILE or an uncommitted
   *    attempt's output (task-level atomicity, the v1-committer
   *    contract); a driver crash mid-commit can leave a published
   *    PREFIX of the job plus a `.staging-*` dir, which the `_SUCCESS`
@@ -57,7 +67,7 @@ import graft.pipeline.{DataKeyResult, Retry, SnapshotWriter}
   * moves become copy-or-rename PUTs, and the commit message (file
   * names + accounting, not data) stays a few KB per task.
   *
-  * The sink is internal to [[graft.pipeline.SnapshotWriter.write]]:
+  * The sink is internal to [[graft.pipeline.SnapshotWriter]]:
   * config and the batch data key travel through a driver-side
   * registry keyed by the `writeId` option, never through plan-visible
   * options (the plaintext DEK must not appear in `explain` output or
@@ -65,18 +75,20 @@ import graft.pipeline.{DataKeyResult, Retry, SnapshotWriter}
   */
 object SnapshotSink {
 
-  /** Input schema — the [[SnapshotWriter.WriteRecord]] shape. */
+  /** Input schema — the [[SnapshotWriter.WriteRecord]] shape plus the
+    * row's nullable `err` (the typed skip reason; null for a record). */
   val InputSchema: StructType = new StructType()
     .add("slice", IntegerType).add("doc", StringType)
     .add("m_id", StringType).add("m_ts", LongType)
     .add("m_db", StringType).add("m_collection", StringType)
     .add("m_source", StringType).add("m_outer", StringType)
     .add("m_inner", StringType).add("m_original_id", StringType)
+    .add("err", StringType)
 
   private val pending =
     new ConcurrentHashMap[String, (SnapshotWriter.Config, DataKeyResult)]()
-  private[sources] val accounting =
-    new ConcurrentHashMap[String, Seq[SnapshotWriter.FileAccounting]]()
+  private[sources] val committed =
+    new ConcurrentHashMap[String, (Seq[SnapshotWriter.FileAccounting], Map[String, Long])]()
 
   /** Driver-side handoff from [[SnapshotWriter.write]]. */
   def register(writeId: String, cfg: SnapshotWriter.Config,
@@ -85,7 +97,7 @@ object SnapshotSink {
   }
 
   def unregister(writeId: String): Unit = {
-    pending.remove(writeId); accounting.remove(writeId); ()
+    pending.remove(writeId); committed.remove(writeId); ()
   }
 
   private[sources] def lookup(writeId: String): (SnapshotWriter.Config, DataKeyResult) = {
@@ -95,9 +107,10 @@ object SnapshotSink {
     v
   }
 
-  /** The committed accounting of a finished write (commit() populated). */
-  def takeAccounting(writeId: String): Seq[SnapshotWriter.FileAccounting] = {
-    val v = accounting.remove(writeId)
+  /** The committed files and outcome counts of a finished write
+    * (commit() populated). */
+  def takeCommitted(writeId: String): (Seq[SnapshotWriter.FileAccounting], Map[String, Long]) = {
+    val v = committed.remove(writeId)
     require(v != null, s"SnapshotSink write $writeId never committed")
     v
   }
@@ -162,7 +175,8 @@ private[sources] final case class StagedFile(stagedPath: String,
 
 private[sources] final case class SnapshotCommitMessage(
     attemptDir: String, files: Seq[StagedFile],
-    accounting: Seq[SnapshotWriter.FileAccounting]) extends WriterCommitMessage
+    accounting: Seq[SnapshotWriter.FileAccounting],
+    outcomes: Map[String, Long]) extends WriterCommitMessage
 
 private[sources] final class SnapshotSinkBatchWrite(writeId: String,
     cfg: SnapshotWriter.Config, dek: DataKeyResult) extends BatchWrite {
@@ -216,8 +230,8 @@ private[sources] final class SnapshotSinkBatchWrite(writeId: String,
     // mid-commit driver crash leaves no marker)
     java.nio.file.Files.writeString(
       new File(cfg.outputDir, "_SUCCESS").toPath, "")
-    val acct = msgs.flatMap(_.accounting).toSeq
-    SnapshotSink.accounting.put(writeId, acct)
+    val outcomes = msgs.flatMap(_.outcomes).groupMapReduce(_._1)(_._2)(_ + _)
+    SnapshotSink.committed.put(writeId, (msgs.flatMap(_.accounting).toSeq, outcomes))
     ()
   }
 
@@ -233,9 +247,10 @@ private[sources] final class SnapshotDataWriterFactory(writeId: String,
 }
 
 /** Task-side writer: rows (slice-clustered, (slice, m_id)-sorted by
-  * the declared distribution) stream through the rolling writer into
-  * this attempt's private staging dir. `commit()` hands the staged
-  * file list + accounting to the driver; `abort()` deletes the
+  * the declared distribution) are counted by outcome (`err`, or
+  * `"ok"`); the ok rows stream through the rolling writer into this
+  * attempt's private staging dir. `commit()` hands the staged file
+  * list, accounting and counts to the driver; `abort()` deletes the
   * attempt dir. Fault injection (Config.faultFirstAttemptAfter)
   * fails FIRST attempts mid-partition so the retry spec can prove
   * staged-but-uncommitted files never surface. */
@@ -259,22 +274,28 @@ private[sources] final class SnapshotDataWriter(writeId: String,
       cfg.faultFirstAttemptAfter
     else Int.MaxValue
   private var written = 0L
+  private val outcomes = scala.collection.mutable.HashMap.empty[String, Long]
 
-  override def write(row: InternalRow): Unit = {
-    if (written >= faultAt) {
-      SnapshotWriter.faultsInjected.incrementAndGet()
-      throw new java.io.IOException(
-        s"injected mid-partition writer fault after $written records")
+  override def write(row: InternalRow): Unit =
+    if (!row.isNullAt(10)) {
+      val err = row.getString(10)
+      outcomes(err) = outcomes.getOrElse(err, 0L) + 1
+    } else {
+      if (written >= faultAt) {
+        SnapshotWriter.faultsInjected.incrementAndGet()
+        throw new java.io.IOException(
+          s"injected mid-partition writer fault after $written records")
+      }
+      rolling.write(SnapshotWriter.WriteRecord(
+        row.getInt(0), row.getString(1), row.getString(2), row.getLong(3),
+        row.getString(4), row.getString(5), row.getString(6), row.getString(7),
+        row.getString(8), row.getString(9)))
+      written += 1
     }
-    rolling.write(SnapshotWriter.WriteRecord(
-      row.getInt(0), row.getString(1), row.getString(2), row.getLong(3),
-      row.getString(4), row.getString(5), row.getString(6), row.getString(7),
-      row.getString(8), row.getString(9)))
-    written += 1
-  }
 
   override def commit(): WriterCommitMessage = {
     val acct = rolling.finish()
+    if (written > 0) outcomes("ok") = written
     def staged(dir: File, targetDir: String): Seq[StagedFile] = {
       val names = dir.list()
       (if (names == null) Array.empty[String] else names).sorted.toSeq
@@ -282,7 +303,7 @@ private[sources] final class SnapshotDataWriter(writeId: String,
     }
     SnapshotCommitMessage(attemptDir.getPath,
       staged(stagedOut, cfg.outputDir) ++ staged(stagedMan, cfg.manifestDir),
-      acct)
+      acct, outcomes.toMap)
   }
 
   override def abort(): Unit = SnapshotSink.deleteRecursively(attemptDir)

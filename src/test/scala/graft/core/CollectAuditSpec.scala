@@ -13,9 +13,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * The boundedness argument per whitelisted file (what makes each site
   * NOT a driver-side loop over data-scale rows):
   *
-  *  - `pipeline/ExportJob.scala` (2): writer accounting (one row per
-  *    written file) and `skipSummary` (one row per distinct skip
-  *    reason).
   *  - `queries/PipelineQueries.scala` (7): six writer-accounting
   *    collects (rows = files written at the configured byte
   *    threshold) and one point-probe result over a fixed `isin` id
@@ -66,7 +63,6 @@ class CollectAuditSpec extends AnyFunSuite {
 
   test("every .collect() in src/main is a pinned, adjudicated site") {
     val pinned = Map(
-      "pipeline/ExportJob.scala" -> 2,
       "queries/Curation.scala" -> 1,
       "queries/EventAnalytics.scala" -> 1,
       "queries/PipelineQueries.scala" -> 7,
@@ -87,7 +83,7 @@ class CollectAuditSpec extends AnyFunSuite {
         s"removed: ${(pinned.toSet -- found.toSet).toSeq.sorted}. " +
         "Adjudicate boundedness in this spec's scaladoc table, or " +
         "make the operator distributed.")
-    assert(found.values.sum === 24) // the ledger total the notes cite
+    assert(found.values.sum === 22) // the ledger total the notes cite
   }
 
   test("no unbounded driver-materialization spellings in src/main") {

@@ -1,5 +1,9 @@
 package graft.pipeline
 
+import java.nio.file.{Files, Path}
+
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSuite
 import graft.pipeline.Completion._
 import graft.pipeline.Control.{CollectionStatus, ExportCompletionStatus, InMemoryStatusService, JobOutcome}
@@ -31,6 +35,79 @@ class ExportJobSpec extends SparkSuite {
       new SnsPublishingService(cfg, sns, sleeper = noSleep))
   }
 
+  /** q41's corpus size: each typed skip takes 1 in 100 records. */
+  private val N = 10000L
+
+  private def corruptRun(faultFirstAttemptAfter: Int = 0): ExportJobSpec.CorruptRun = {
+    val (cfg, writerCfg, status, product, _, _, messaging, snsService) = harness()
+    val before = ExportJobSpec.unwraps.sum
+    val (result, reg) = Metrics.instrumented(spark) { _ =>
+      ExportJob.run(spark, s => Fixture.generate(s, N, corrupt = true), cfg,
+        writerCfg.copy(faultFirstAttemptAfter = faultFirstAttemptAfter),
+        new ExportJobSpec.CountingKeys(Fixture.keyService), status, product,
+        messaging, snsService)
+    }
+    ExportJobSpec.CorruptRun(result, Path.of(writerCfg.outputDir),
+      Path.of(writerCfg.manifestDir), ExportJobSpec.unwraps.sum - before,
+      reg.counter("graft_records_read_total"))
+  }
+
+  private lazy val clean = corruptRun()
+
+  /** Every regular file under `dir`, relative path → bytes. */
+  private def tree(dir: Path): Map[String, Seq[Byte]] = {
+    val s = Files.walk(dir)
+    try s.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(p => dir.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
+    finally s.close()
+  }
+
+  /** Single-evaluation pin for the export. It guards against
+    * Catalyst's PushDownPredicates: fed `ExportPipeline.records(out)`,
+    * an `err IS NULL` filter, the writer's plan gets that filter pushed
+    * below the pipeline's projections with the whole `err` coalesce
+    * chain (from_json, the unwrap UDF, graft_aes_ctr_decrypt, the audit
+    * and validate UDFs) inlined into it, so the pipeline runs about
+    * three times per row; a separate `skipSummary(out)` action then
+    * reads the source a second time. Together that is four unwraps per
+    * record and two source passes. Fed the unfiltered output, with the
+    * skips counted in the sink, each record with a `dbObject` is
+    * unwrapped once and the source is read once. A rise in either
+    * count means a filter or a second action crept back. */
+  test("one ExportJob.run reads the source once and unwraps each record's key once") {
+    val withDbObject = N - N / 100 // the MissingFieldSlot records never reach decrypt
+    assert(clean.unwraps == withDbObject,
+      s"${clean.unwraps} unwraps for $withDbObject records with a dbObject")
+    assert(clean.recordsRead == N,
+      s"the source was read ${clean.recordsRead.toDouble / N} times")
+  }
+
+  test("conservation: read = written + typed skips, with q41's seeded shares") {
+    val r = clean.result
+    assert(r.outcome == JobOutcome(completed = true))
+    val written = r.files.map(_.records).sum
+    val typed = r.skips - "ok"
+    assert(written + typed.values.sum == clean.recordsRead)
+    assert(typed == Map("bad_decrypted" -> 100L, "decrypt_failed" -> 100L,
+      "missing:dbObject" -> 100L))
+    val manifestLines = tree(clean.manDir).collect {
+      case (name, bytes) if name.endsWith(".csv") => bytes.count(_ == '\n').toLong
+    }.sum
+    assert(r.skips("ok") == written && manifestLines == written)
+  }
+
+  test("a retried writer task's partial counts never merge: counts and files equal a fault-free run") {
+    val before = SnapshotWriter.faultsInjected.get()
+    val faulted = corruptRun(faultFirstAttemptAfter = 1000)
+    assert(SnapshotWriter.faultsInjected.get() - before > 0,
+      "no writer fault fired, so the run proves nothing")
+    assert(faulted.result.outcome == JobOutcome(completed = true))
+    assert(faulted.result.skips == clean.result.skips)
+    assert(faulted.result.files.toSet == clean.result.files.toSet)
+    assert(tree(faulted.outDir) == tree(clean.outDir))
+    assert(tree(faulted.manDir) == tree(clean.manDir))
+  }
+
   test("happy path: one snapshot-sender message per written file, counts + statuses land") {
     val (cfg, writerCfg, status, product, sqs, _, messaging, snsService) = harness()
     val result = ExportJob.run(spark, s => Fixture.generate(s, 500), cfg,
@@ -59,6 +136,7 @@ class ExportJobSpec extends SparkSuite {
     val result = ExportJob.run(spark, s => Fixture.generate(s, 0), cfg,
       writerCfg, Fixture.keyService, status, product, messaging, snsService)
     assert(result.files.isEmpty)
+    assert(result.skips.isEmpty)
     assert(result.completionStatus == ExportCompletionStatus.CompletedSuccessfully)
     val bodies = sqs.sent.map(_.body)
     assert(bodies.size == 1 && bodies.head.contains("\"files_exported\": 0"))
@@ -98,5 +176,25 @@ class ExportJobSpec extends SparkSuite {
     assert(result.completionStatus == ExportCompletionStatus.CompletedUnsuccessfully)
     assert(product.currentStatus.contains("FAILED"))
     assert(sns.published.map(_.payload).exists(_.contains("Export finished - failed")))
+  }
+}
+
+object ExportJobSpec {
+  /** One `ExportJob.run` over the corrupt fixture, with the data-key
+    * unwraps it made and the source records its tasks read (off the
+    * sentinel-drained listener of [[Metrics.instrumented]]). */
+  final case class CorruptRun(result: ExportJob.Result,
+      outDir: Path, manDir: Path, unwraps: Long, recordsRead: Long)
+
+  /** JVM-wide unwrap count: under `local[N]` the task-side copies of
+    * [[CountingKeys]] run in this JVM, so their calls land here. */
+  val unwraps = new java.util.concurrent.atomic.LongAdder
+
+  final class CountingKeys(inner: KeyService) extends KeyService {
+    override def decryptKey(keyEncryptionKeyId: String, encryptedKey: String): String = {
+      unwraps.increment()
+      inner.decryptKey(keyEncryptionKeyId, encryptedKey)
+    }
+    override def batchDataKey(): DataKeyResult = inner.batchDataKey()
   }
 }

@@ -56,7 +56,10 @@ object Envelope {
       case _ => None
     }
 
-  private def blankToNull(c: Column): Column = when(length(c) > 0, c)
+  // Emptiness by comparison with "", never by `length`: `length` counts
+  // the UTF-8 characters of every value on every row, the base64
+  // dbObject included, and these checks only need zero versus not.
+  private def blankToNull(c: Column): Column = when(c =!= "", c)
 
   /** Parse a raw scan DataFrame with columns
     * (hbase_id: binary, ts: long, value: string) into SourceRecord
@@ -99,7 +102,7 @@ object Envelope {
     // NULL message struct from the single from_json pass — the same
     // set the reference's `getAsJsonObject("message")` throws on — so
     // bad-envelope detection needs no second parse of `value`.
-    def missing(c: Column): Column = c.isNull || length(c) === 0
+    def missing(c: Column): Column = c.isNull || c === ""
     val err =
       when(msg.isNull, "bad_envelope")
         .when(missing(col("db_object")), "missing:dbObject")

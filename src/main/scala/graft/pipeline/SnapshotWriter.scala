@@ -40,9 +40,9 @@ import org.apache.spark.sql.functions._
   * (topic, slice, file#) instead of a CSPRNG so runs are reproducible
   * and oracle-checkable; swap `ivFor` for SecureRandom in production.
   *
-  * Scale design: records are shuffled once on the slice id and each
-  * task streams its slice through constant memory (the rolling batch
-  * buffer) — the same layout a 1000-executor run would use, with the
+  * Scale design: records are shuffled once, one partition per slice,
+  * and each task streams its slice through constant memory (the
+  * rolling batch buffer) — the same layout a 1000-executor run would use, with the
   * local `java.io` swapped for the object-store client. No driver
   * materialization anywhere; the returned accounting DataFrame is one
   * row per written file.
@@ -147,7 +147,7 @@ object SnapshotWriter {
     *
     * The physical write runs through the DSv2
     * [[graft.sources.SnapshotSink]] `BatchWrite`: the sink DECLARES
-    * its distribution (clustered by slice, one partition per slice,
+    * its distribution (clustered by `part`, one partition per slice,
     * ordered by (slice, m_id)) via `RequiresDistributionAndOrdering`
     * — Spark plans the shuffle+sort — and each task stages its files,
     * returning accounting as a `WriterCommitMessage`; the driver's
@@ -168,15 +168,20 @@ object SnapshotWriter {
 
   /** The sink-input projection of [[write]], exposed so prepared-plan
     * callers ([[graft.core.PreparedTransform]] sinks) can analyze it
-    * once: record relation or pipeline output → (slice, doc, m_*, err)
-    * clustered shape; a relation without `err` is all records.
-    * Depends on `cfg` only through `scanWidth`, so one shaped plan
-    * serves every batch-scoped output directory. */
+    * once: record relation or pipeline output → (slice, doc, m_*, err,
+    * part) clustered shape; a relation without `err` is all records.
+    * `part` is the slice's clustering key, looked up from a literal
+    * array of [[graft.sources.SnapshotSink.partitionKeys]], so each
+    * slice gets its own writer task. Depends on `cfg` only through
+    * `scanWidth`, so one shaped plan serves every batch-scoped output
+    * directory. */
   def shaped(records: DataFrame, cfg: Config): DataFrame = {
     val spark = records.sparkSession
     import spark.implicits._
     val err =
       if (records.columns.contains("err")) $"err" else lit(null).cast("string")
+    val slices = 256 / cfg.scanWidth
+    val partKeys = typedLit(graft.sources.SnapshotSink.partitionKeys(slices))
     // signed first key byte → slice index, columnar:
     // u (0..255) → ((u + 128) % 256) / width == (signedByte + 128) / width
     records
@@ -184,7 +189,10 @@ object SnapshotWriter {
         (pmod(conv(hex(expr("substring(hbase_id, 1, 1)")), 16, 10)
           .cast("int") + 128, lit(256)) / cfg.scanWidth).cast("int"))
       .select($"slice", $"doc", $"m_id", $"m_ts", $"m_db", $"m_collection",
-        $"m_source", $"m_outer", $"m_inner", $"m_original_id", err.as("err"))
+        $"m_source", $"m_outer", $"m_inner", $"m_original_id", err.as("err"),
+        // `% slices`: a width that does not divide 256 has one slice
+        // id past the last partition
+        partKeys($"slice" % slices).as("part"))
   }
 
   /** Writes an already-[[shaped]] relation through the DSv2 sink. */

@@ -1,10 +1,10 @@
 package graft.pipeline
 
 import java.text.{ParseException, SimpleDateFormat}
+import java.time.{LocalDate, Month, Year}
 import java.util.{Date, TimeZone}
 
 import scala.jdk.CollectionConverters._
-import scala.util.matching.Regex
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
@@ -18,6 +18,23 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
   * The pipeline calls [[Validator.validate]] from a UDF — a JSON-tree
   * rewrite is genuinely opaque to Catalyst (SURVEY §7.3), so a UDF is
   * the honest physical form; everything around it stays columnar.
+  *
+  * Timestamps go through one codec. A fixed-position shape check
+  * accepts exactly the language of the reference's two full-match
+  * regexes: ASCII digits in the shape `yyyy-MM-ddTHH:mm:ss.SSS`
+  * followed by `Z` (24 chars) or `+dddd` (28 chars). An exact-shape
+  * string whose fields are all in their strict ranges (month 1–12,
+  * day within its month, hour ≤ 23, minute and second ≤ 59, offset
+  * hours ≤ 23 and minutes ≤ 59) and whose year is ≥ 1600 — Gregorian
+  * under both `GregorianCalendar` and `java.time`, even after the
+  * offset shifts it back into 1599 — is decoded and formatted with
+  * digit arithmetic. Every other string takes the reference's lenient
+  * `SimpleDateFormat` path, which alone reproduces field roll-over
+  * (month 13, hour 24, …), the Julian calendar before the 1582
+  * cutover, the `ParseException` for an offset past +2359, and, for
+  * strings of neither exact shape, the prefix and variable-width
+  * parse of [[parseValidDateTime]]. The split is chosen by the input
+  * alone and gives the same result on both sides of it.
   */
 object Validator {
 
@@ -35,11 +52,11 @@ object Validator {
   val IncomingFormat = "yyyy-MM-dd'T'HH:mm:ss.SSSZZZZ"
   val OutgoingFormat = "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"
 
-  // Full-match regexes gating date parsing (DateWrapper.kt:101-107).
-  private val incomingRe: Regex =
-    """\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}\.\d{3}\+\d{4}""".r
-  private val outgoingRe: Regex =
-    """\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}\.\d{3}Z""".r
+  // The two exact shapes gating date wrapping (the reference's
+  // full-match regexes, DateWrapper.kt:101-107); '0' stands for one
+  // ASCII digit.
+  private val IncomingShape = "0000-00-00T00:00:00.000+0000"
+  private val OutgoingShape = "0000-00-00T00:00:00.000Z"
 
   // SimpleDateFormat is not thread-safe; executors run many task
   // threads, so formatters are per-thread. Output is pinned to UTC for
@@ -55,32 +72,112 @@ object Validator {
   private val formats = ThreadLocal.withInitial[(SimpleDateFormat, SimpleDateFormat)](
     () => (fmt(IncomingFormat), fmt(OutgoingFormat)))
 
+  private def hasShape(s: String, shape: String): Boolean =
+    s.length == shape.length && {
+      var i = 0
+      while (i < shape.length && {
+          val c = s.charAt(i)
+          if (shape.charAt(i) == '0') c >= '0' && c <= '9' else c == shape.charAt(i)
+        }) i += 1
+      i == shape.length
+    }
+
+  /** The value of the ASCII digits `s(from until until)`. */
+  private def digits(s: String, from: Int, until: Int): Int = {
+    var v = 0
+    var i = from
+    while (i < until) { v = v * 10 + (s.charAt(i) - '0'); i += 1 }
+    v
+  }
+
+  /** Marks a string outside the codec's domain. */
+  private final val Uncoded = Long.MinValue
+
+  /** Epoch millis of an exact-shape timestamp in the codec's domain
+    * (strict fields, year ≥ 1600), else [[Uncoded]]. */
+  private def codedMillis(s: String): Long = {
+    val offset = // minutes east of UTC, or -1 when not coded
+      if (hasShape(s, OutgoingShape)) 0
+      else if (hasShape(s, IncomingShape)) {
+        val hh = digits(s, 24, 26)
+        val mm = digits(s, 26, 28)
+        if (hh > 23 || mm > 59) -1 else hh * 60 + mm
+      } else -1
+    if (offset < 0) Uncoded
+    else {
+      val year = digits(s, 0, 4)
+      val month = digits(s, 5, 7)
+      val day = digits(s, 8, 10)
+      val hour = digits(s, 11, 13)
+      val minute = digits(s, 14, 16)
+      val second = digits(s, 17, 19)
+      if (year < 1600 || month < 1 || month > 12 || day < 1 ||
+          day > Month.of(month).length(Year.isLeap(year.toLong)) ||
+          hour > 23 || minute > 59 || second > 59) Uncoded
+      else {
+        val minutes = LocalDate.of(year, month, day).toEpochDay * 1440 +
+          hour * 60 + minute - offset
+        minutes * 60000L + second * 1000L + digits(s, 20, 23)
+      }
+    }
+  }
+
+  /** The outgoing shape of a codec-domain instant (year 1599–9999). */
+  private def formatCoded(millis: Long): String = {
+    val date = LocalDate.ofEpochDay(Math.floorDiv(millis, 86400000L))
+    val ms = Math.floorMod(millis, 86400000L).toInt
+    val c = OutgoingShape.toCharArray
+    def put(at: Int, width: Int, v: Int): Unit = {
+      var i = at + width
+      var x = v
+      while (i > at) { i -= 1; c(i) = ('0' + x % 10).toChar; x /= 10 }
+    }
+    put(0, 4, date.getYear); put(5, 2, date.getMonthValue)
+    put(8, 2, date.getDayOfMonth); put(11, 2, ms / 3600000)
+    put(14, 2, ms / 60000 % 60); put(17, 2, ms / 1000 % 60)
+    put(20, 3, ms % 1000)
+    new String(c)
+  }
+
   /** Dual-format fallback parse (Validator.kt:153-163); throws
     * ParseException when neither format matches. */
   def parseValidDateTime(s: String): Date = {
-    val (in, out) = formats.get()
-    try in.parse(s)
-    catch {
-      case _: Exception =>
-        try out.parse(s)
-        catch {
-          case _: Exception => throw new ParseException(
-            s"Unparseable date found: '$s', did not match any supported date formats", 0)
-        }
+    val millis = codedMillis(s)
+    if (millis != Uncoded) new Date(millis)
+    else {
+      val (in, out) = formats.get()
+      try in.parse(s)
+      catch {
+        case _: Exception =>
+          try out.parse(s)
+          catch {
+            case _: Exception => throw new ParseException(
+              s"Unparseable date found: '$s', did not match any supported date formats", 0)
+          }
+      }
     }
   }
 
   /** Reformat any accepted timestamp to the outgoing
     * `yyyy-MM-dd'T'HH:mm:ss.SSS'Z'` shape (Validator.kt:165-170). */
-  def formatToOutgoing(s: String): String =
-    formats.get()._2.format(parseValidDateTime(s))
+  def formatToOutgoing(s: String): String = {
+    val millis = codedMillis(s)
+    if (millis != Uncoded) formatCoded(millis)
+    else formats.get()._2.format(parseValidDateTime(s))
+  }
 
-  /** Regex-gated parse used by the recursive wrapper
-    * (DateWrapper.kt:89-99): None when the string is not date-shaped. */
-  private def parsedDate(s: String): Option[Date] = s match {
-    case incomingRe() => Some(formats.get()._1.parse(s))
-    case outgoingRe() => Some(formats.get()._2.parse(s))
-    case _ => None
+  /** Shape-gated reformat used by the recursive wrapper
+    * (DateWrapper.kt:89-99): the outgoing form of a date-shaped
+    * string, None when the string is not date-shaped. */
+  private def wrappedDate(s: String): Option[String] = {
+    val millis = codedMillis(s)
+    if (millis != Uncoded) Some(formatCoded(millis))
+    else {
+      val (in, out) = formats.get()
+      if (hasShape(s, IncomingShape)) Some(out.format(in.parse(s)))
+      else if (hasShape(s, OutgoingShape)) Some(out.format(out.parse(s)))
+      else None
+    }
   }
 
   /** Manifest timestamp preference flips with snapshot type
@@ -100,13 +197,17 @@ object Validator {
   /** Key-sorted (top level only) compact serialization — the
     * reference's id canonicalization (app/utils/JsonUtils.kt:7-14 uses
     * Klaxon `toSortedMap`, which sorts only the outer object). */
-  def sortJsonByKey(unsorted: String): String = {
-    val node = mapper.readTree(unsorted).asInstanceOf[ObjectNode]
+  def sortJsonByKey(unsorted: String): String =
+    mapper.writeValueAsString(
+      sortedByKey(mapper.readTree(unsorted).asInstanceOf[ObjectNode]))
+
+  /** A new node holding `node`'s top-level fields in key order. */
+  private def sortedByKey(node: JsonNode): ObjectNode = {
     val sorted = mapper.createObjectNode()
     node.fieldNames().asScala.toSeq.sorted.foreach { k =>
       sorted.set[JsonNode](k, node.get(k))
     }
-    mapper.writeValueAsString(sorted)
+    sorted
   }
 
   /** Recover (originalId, canonicalId) from the printable row-key JSON
@@ -150,7 +251,7 @@ object Validator {
       case c: ObjectNode => wrapDatesInTree(c)
       case c: ArrayNode => processArray(c)
       case c if c != null && c.isTextual =>
-        parsedDate(c.asText()).foreach { d =>
+        wrappedDate(c.asText()).foreach { d =>
           parent.set[JsonNode](key, dateObject(d))
         }
       case _ => ()
@@ -158,9 +259,9 @@ object Validator {
 
   private def processMongoDate(dateObj: ObjectNode): Unit = {
     val ts = dateObj.get(DateField).asText()
-    parsedDate(ts).foreach { d =>
+    wrappedDate(ts).foreach { d =>
       dateObj.remove(DateField)
-      dateObj.put(DateField, formats.get()._2.format(d))
+      dateObj.put(DateField, d)
     }
   }
 
@@ -170,14 +271,14 @@ object Validator {
         case v: ObjectNode => wrapDatesInTree(v)
         case v: ArrayNode => processArray(v)
         case v if v.isTextual =>
-          parsedDate(v.asText()).foreach(d => arr.set(i, dateObject(d)))
+          wrappedDate(v.asText()).foreach(d => arr.set(i, dateObject(d)))
         case _ => ()
       }
     }
 
-  private def dateObject(d: Date): ObjectNode = {
+  private def dateObject(outgoing: String): ObjectNode = {
     val o = mapper.createObjectNode()
-    o.put(DateField, formats.get()._2.format(d))
+    o.put(DateField, outgoing)
     o
   }
 
@@ -213,8 +314,10 @@ object Validator {
     obj.set[JsonNode](keyToReplace, n)
   }
 
+  /** An object node's [[sortJsonByKey]] form, built from the node
+    * itself rather than a serialize → re-parse round trip. */
   private def elementAsString(n: JsonNode): String =
-    if (n.isObject) sortJsonByKey(mapper.writeValueAsString(n))
+    if (n.isObject) mapper.writeValueAsString(sortedByKey(n))
     else n.asText()
 
   // ------------------------------------------------------ entry point

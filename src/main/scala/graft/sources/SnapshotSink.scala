@@ -7,6 +7,8 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder, Transform}
@@ -25,10 +27,23 @@ import graft.pipeline.{DataKeyResult, Retry, SnapshotWriter}
   * Division of responsibility:
   *
   *  - **the WRITE declares its physical needs** via
-  *    `RequiresDistributionAndOrdering`: clustered on `slice` into one
+  *    `RequiresDistributionAndOrdering`: clustered on `part` into one
   *    partition per key-range slice, ordered by (slice, m_id). Spark
   *    plans the shuffle + sort — callers no longer hand-roll
   *    `repartition().sortWithinPartitions()`;
+  *  - **one writer task per slice**: Spark plans a clustered
+  *    distribution as `pmod(murmur3(key, 42), n)`, and clustering on
+  *    `slice` itself collides — at width 128 both slice ids hash to
+  *    partition 1, at width 64 four slices land in two partitions —
+  *    so one task sorts, compresses and encrypts every record while
+  *    its siblings sit empty. The shaped input therefore carries
+  *    `part`, the key [[partitionKeys]] picks for its slice so that
+  *    Spark's own hash sends slice `i` to partition `i`. Two designs
+  *    were rejected: `Distributions.ordered` plans a range
+  *    partitioner, which samples its child and so evaluates the
+  *    pipeline a second time; padding the partition count until the
+  *    hash of the slice ids is injective needs 3 partitions for 2
+  *    slices but 4,196 for 256;
   *  - **each task stages, never publishes**: a
   *    [[graft.pipeline.SnapshotWriter.SliceRollingWriter]] streams the
   *    partition through constant memory into the task's PRIVATE
@@ -76,14 +91,35 @@ import graft.pipeline.{DataKeyResult, Retry, SnapshotWriter}
 object SnapshotSink {
 
   /** Input schema — the [[SnapshotWriter.WriteRecord]] shape plus the
-    * row's nullable `err` (the typed skip reason; null for a record). */
+    * row's nullable `err` (the typed skip reason; null for a record)
+    * and `part`, the clustering key of the row's slice
+    * ([[partitionKeys]]); the data writer never reads `part`. */
   val InputSchema: StructType = new StructType()
     .add("slice", IntegerType).add("doc", StringType)
     .add("m_id", StringType).add("m_ts", LongType)
     .add("m_db", StringType).add("m_collection", StringType)
     .add("m_source", StringType).add("m_outer", StringType)
     .add("m_inner", StringType).add("m_original_id", StringType)
-    .add("err", StringType)
+    .add("err", StringType).add("part", IntegerType)
+
+  /** For each slice `i` of `slices`, the smallest non-negative `Int`
+    * that Spark's `HashPartitioning` over `slices` partitions places
+    * in partition `i` — evaluated through Spark's own partition-id
+    * expression, so the keys follow its hash (and seed) by
+    * construction. Clustering on these keys gives every slice its own
+    * writer task. */
+  def partitionKeys(slices: Int): IndexedSeq[Int] = {
+    val keys = Array.fill(slices)(-1)
+    var found = 0
+    var k = 0
+    while (found < slices) {
+      val p = HashPartitioning(Seq(Literal(k)), slices)
+        .partitionIdExpression.eval(InternalRow.empty).asInstanceOf[Int]
+      if (keys(p) < 0) { keys(p) = k; found += 1 }
+      k += 1
+    }
+    keys.toIndexedSeq
+  }
 
   private val pending =
     new ConcurrentHashMap[String, (SnapshotWriter.Config, DataKeyResult)]()
@@ -156,11 +192,15 @@ private[sources] final class SnapshotSinkWrite(writeId: String,
     cfg: SnapshotWriter.Config, dek: DataKeyResult)
     extends Write with RequiresDistributionAndOrdering {
 
-  // one partition per key-range slice, clustered on the slice id,
-  // each sorted by (slice, m_id) — the physical shape the rolling
-  // writer needs, declared to (and planned by) Catalyst
+  // one partition per key-range slice, each sorted by (slice, m_id) —
+  // the physical shape the rolling writer needs, declared to (and
+  // planned by) Catalyst. Clustered on `part`, not `slice`: Spark's
+  // hash of the slice ids collides (both width-128 slices land in
+  // partition 1), while slice i's `part` key hashes to partition i
+  // (SnapshotSink.partitionKeys; the rejected alternatives are in the
+  // SnapshotSink scaladoc)
   override def requiredDistribution(): Distribution =
-    Distributions.clustered(Array(Expressions.column("slice")))
+    Distributions.clustered(Array(Expressions.column("part")))
   override def requiredNumPartitions(): Int = 256 / cfg.scanWidth
   override def requiredOrdering(): Array[SortOrder] = Array(
     Expressions.sort(Expressions.column("slice"), SortDirection.ASCENDING),
@@ -246,10 +286,10 @@ private[sources] final class SnapshotDataWriterFactory(writeId: String,
     new SnapshotDataWriter(writeId, cfg, dek, partitionId, taskId)
 }
 
-/** Task-side writer: rows (slice-clustered, (slice, m_id)-sorted by
-  * the declared distribution) are counted by outcome (`err`, or
-  * `"ok"`); the ok rows stream through the rolling writer into this
-  * attempt's private staging dir. `commit()` hands the staged file
+/** Task-side writer: rows (one slice per partition, (slice,
+  * m_id)-sorted by the declared distribution; `part` is not read) are
+  * counted by outcome (`err`, or `"ok"`); the ok rows stream through
+  * the rolling writer into this attempt's private staging dir. `commit()` hands the staged file
   * list, accounting and counts to the driver; `abort()` deletes the
   * attempt dir. Fault injection (Config.faultFirstAttemptAfter)
   * fails FIRST attempts mid-partition so the retry spec can prove

@@ -2,10 +2,17 @@ package graft.pipeline
 
 import java.io.File
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 
-import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 
 import graft.SparkSuite
+import graft.sources.SnapshotSink
 
 /** Golden writer spec mirroring S3StreamingWriterTest.kt (byte-threshold
   * rolling, object-key naming, metadata) and the UberTestSpec
@@ -138,8 +145,7 @@ class SnapshotWriterSpec extends SparkSuite {
       "db.database.collection", 20000, "gz", 128,
       faultFirstAttemptAfter = 300)
     val acct = SnapshotWriter.write(recs, cfg, Fixture.keyService).collect().toSeq
-    // the fault actually FIRED (hash partitioning may coalesce both
-    // slices into one task, so >=1 — a retry test that never faulted
+    // the fault actually FIRED (a retry test that never faulted
     // proves nothing)
     val fired = SnapshotWriter.faultsInjected.get() - before
     assert(fired >= 1, s"expected >=1 injected writer faults, saw $fired")
@@ -167,6 +173,47 @@ class SnapshotWriterSpec extends SparkSuite {
     assert(SnapshotWriter.escapeCsv("""a,b""") == "\"a,b\"")
     assert(SnapshotWriter.escapeCsv("a\"b") == "\"a\"\"b\"")
     assert(SnapshotWriter.escapeCsv("a\nb") == "\"a\nb\"")
+  }
+
+  test("partitionKeys: slice i's key hashes to partition i at every width") {
+    for (width <- Iterator.iterate(1)(_ * 2).takeWhile(_ <= 256)) {
+      val slices = 256 / width
+      val keys = SnapshotSink.partitionKeys(slices)
+      assert(keys.length == slices)
+      keys.zipWithIndex.foreach { case (k, slice) =>
+        val p = HashPartitioning(Seq(Literal(k)), slices)
+          .partitionIdExpression.eval(InternalRow.empty)
+        assert(p == slice, s"width $width: slice $slice key $k -> partition $p")
+      }
+    }
+  }
+
+  /** Shuffle records read by each task of the writer stage: the last
+    * result stage whose tasks read shuffle records (the drain job of
+    * [[Metrics.instrumented]] reads none). That drain also covers this
+    * listener: both sit on the shared listener queue, which hands each
+    * event to every listener before the next. */
+  private def writerTaskReads(width: Int): Seq[Long] = {
+    val tasks = new ConcurrentLinkedQueue[(Int, Long)]
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskType == "ResultTask" && e.taskMetrics != null)
+          tasks.add((e.stageId, e.taskMetrics.shuffleReadMetrics.recordsRead))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try Metrics.instrumented(spark)(_ => writeAll("gz", width = width))
+    finally spark.sparkContext.removeSparkListener(listener)
+    tasks.asScala.toSeq.groupMap(_._1)(_._2)
+      .filter(_._2.exists(_ > 0)).maxBy(_._1)._2
+  }
+
+  test("one writer task per slice, every task holding records (widths 128, 64)") {
+    for (width <- Seq(128, 64)) {
+      val reads = writerTaskReads(width)
+      assert(reads.size == 256 / width, s"width $width: writer tasks $reads")
+      assert(reads.forall(_ > 0), s"width $width: an empty writer task in $reads")
+      assert(reads.sum == 1000, s"width $width: writer tasks $reads")
+    }
   }
 
   test("slice labels cover the signed byte space (HBasePartitioner.kt:12-37)") {

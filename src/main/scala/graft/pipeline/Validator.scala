@@ -1,7 +1,8 @@
 package graft.pipeline
 
 import java.text.{ParseException, SimpleDateFormat}
-import java.time.{LocalDate, Month, Year}
+import java.time.{DateTimeException, Instant, LocalDateTime, ZoneOffset}
+import java.time.format.DateTimeFormatter
 import java.util.{Date, TimeZone}
 
 import scala.jdk.CollectionConverters._
@@ -27,9 +28,10 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
   * day within its month, hour ≤ 23, minute and second ≤ 59, offset
   * hours ≤ 23 and minutes ≤ 59) and whose year is ≥ 1600 — Gregorian
   * under both `GregorianCalendar` and `java.time`, even after the
-  * offset shifts it back into 1599 — is decoded and formatted with
-  * digit arithmetic. Every other string takes the reference's lenient
-  * `SimpleDateFormat` path, which alone reproduces field roll-over
+  * offset shifts it back into 1599 — is decoded with a strict
+  * `java.time.LocalDateTime` and formatted with a `DateTimeFormatter`
+  * of the outgoing pattern. Every other string takes the reference's
+  * lenient `SimpleDateFormat` path, which alone reproduces roll-over
   * (month 13, hour 24, …), the Julian calendar before the 1582
   * cutover, the `ParseException` for an offset past +2359, and, for
   * strings of neither exact shape, the prefix and variable-width
@@ -94,7 +96,9 @@ object Validator {
   private final val Uncoded = Long.MinValue
 
   /** Epoch millis of an exact-shape timestamp in the codec's domain
-    * (strict fields, year ≥ 1600), else [[Uncoded]]. */
+    * (strict fields, year ≥ 1600), else [[Uncoded]]. The offset is
+    * read by hand because `java.time` offsets stop at ±18:00, while
+    * the incoming shape allows up to +2359. */
   private def codedMillis(s: String): Long = {
     val offset = // minutes east of UTC, or -1 when not coded
       if (hasShape(s, OutgoingShape)) 0
@@ -103,41 +107,20 @@ object Validator {
         val mm = digits(s, 26, 28)
         if (hh > 23 || mm > 59) -1 else hh * 60 + mm
       } else -1
-    if (offset < 0) Uncoded
-    else {
-      val year = digits(s, 0, 4)
-      val month = digits(s, 5, 7)
-      val day = digits(s, 8, 10)
-      val hour = digits(s, 11, 13)
-      val minute = digits(s, 14, 16)
-      val second = digits(s, 17, 19)
-      if (year < 1600 || month < 1 || month > 12 || day < 1 ||
-          day > Month.of(month).length(Year.isLeap(year.toLong)) ||
-          hour > 23 || minute > 59 || second > 59) Uncoded
-      else {
-        val minutes = LocalDate.of(year, month, day).toEpochDay * 1440 +
-          hour * 60 + minute - offset
-        minutes * 60000L + second * 1000L + digits(s, 20, 23)
-      }
-    }
+    if (offset < 0 || digits(s, 0, 4) < 1600) Uncoded
+    else
+      try LocalDateTime.of(digits(s, 0, 4), digits(s, 5, 7), digits(s, 8, 10),
+          digits(s, 11, 13), digits(s, 14, 16), digits(s, 17, 19))
+        .toEpochSecond(ZoneOffset.UTC) * 1000L + digits(s, 20, 23) - offset * 60000L
+      catch { case _: DateTimeException => Uncoded }
   }
 
+  // thread-safe, unlike SimpleDateFormat
+  private val outgoing = DateTimeFormatter.ofPattern(OutgoingFormat).withZone(ZoneOffset.UTC)
+
   /** The outgoing shape of a codec-domain instant (year 1599–9999). */
-  private def formatCoded(millis: Long): String = {
-    val date = LocalDate.ofEpochDay(Math.floorDiv(millis, 86400000L))
-    val ms = Math.floorMod(millis, 86400000L).toInt
-    val c = OutgoingShape.toCharArray
-    def put(at: Int, width: Int, v: Int): Unit = {
-      var i = at + width
-      var x = v
-      while (i > at) { i -= 1; c(i) = ('0' + x % 10).toChar; x /= 10 }
-    }
-    put(0, 4, date.getYear); put(5, 2, date.getMonthValue)
-    put(8, 2, date.getDayOfMonth); put(11, 2, ms / 3600000)
-    put(14, 2, ms / 60000 % 60); put(17, 2, ms / 1000 % 60)
-    put(20, 3, ms % 1000)
-    new String(c)
-  }
+  private def formatCoded(millis: Long): String =
+    outgoing.format(Instant.ofEpochMilli(millis))
 
   /** Dual-format fallback parse (Validator.kt:153-163); throws
     * ParseException when neither format matches. */

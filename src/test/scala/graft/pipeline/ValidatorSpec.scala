@@ -317,7 +317,7 @@ class ValidatorSpec extends AnyFunSuite {
 }
 
 /** The `SimpleDateFormat` implementation of the timestamp paths and of
-  * [[Validator.validate]] that the digit codec replaced, kept as the
+  * [[Validator.validate]] that the `java.time` codec replaced, kept as the
   * differential reference: regex-gated, lenient, UTC-pinned, and ids
   * canonicalized by serialize → re-parse → sort. Single-threaded. */
 private object SdfReference {

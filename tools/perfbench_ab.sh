@@ -11,12 +11,13 @@
 #   python3 perfbench/run.py --workload W --seed S --seconds SEC --trace 0
 #
 # once in each tree, alternating which tree runs first (SEC is
-# BENCHMARK.json's run_seconds unless AB_SECONDS is set). Every run's
-# result line is appended to AB_OUT (default: ab-<workload>.jsonl in the
-# current directory). At the end it prints, for each end-to-end metric,
-# each side's median and quartiles, how many pairs the change wins and
-# ties, and whether the change's median beats the parent's by more than
-# the parent's interquartile range; then the failed operations per side.
+# BENCHMARK.json's run_seconds). Every run's result line is appended to
+# AB_OUT (default: ab-<workload>.jsonl in the current directory); a run
+# that fails or prints nothing is recorded as an incorrect run. At the
+# end it prints, for each end-to-end metric, each side's median and
+# quartiles, how many pairs the change wins and ties, and whether the
+# change's median beats the parent's by more than the parent's
+# interquartile range; then the failed operations per side.
 #
 # It only reads what the benchmark prints; nothing under perfbench/ is
 # changed.
@@ -30,7 +31,7 @@ rev=$1 workload=$2 first=$3 pairs=$4
 
 child=$(git rev-parse --show-toplevel)
 sha=$(git -C "$child" rev-parse --verify "$rev^{commit}")
-seconds=${AB_SECONDS:-$(python3 -c 'import json,sys; print(json.load(open(sys.argv[1]))["run_seconds"])' "$child/BENCHMARK.json")}
+seconds=$(python3 -c 'import json,sys; print(json.load(open(sys.argv[1]))["run_seconds"])' "$child/BENCHMARK.json")
 parent=${AB_DIR:-$(mktemp -d "${TMPDIR:-/tmp}/perfbench-ab-parent.XXXXXX")}
 out=${AB_OUT:-$PWD/ab-$workload.jsonl}
 
@@ -45,7 +46,8 @@ echo "[ab] parent $sha in $parent; change $child; results in $out" >&2
 run() {
   local line
   line=$(cd "$2" && python3 perfbench/run.py --workload "$workload" --seed "$3" \
-    --seconds "$seconds" --trace 0 | tail -n 1) || line='{"correct": false, "attempted": 0, "failed": 0, "metrics": {}}'
+    --seconds "$seconds" --trace 0 | tail -n 1) || line=
+  [ -n "$line" ] || line='{"correct": false, "attempted": 0, "failed": 0, "metrics": {}}'
   printf '{"side": "%s", "seed": %s, "result": %s}\n' "$1" "$3" "$line" >>"$out"
   echo "[ab] $1 seed $3: $line" >&2
 }

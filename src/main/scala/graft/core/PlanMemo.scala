@@ -18,9 +18,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the logical plan it produces is identical on every call for the
   * same (session, dir, fixture fingerprint).
   *
-  * This memo caches a LOGICAL PLAN only — since round 22 the
-  * optimizer's fixpoint output (see `level` below; analyzed-tree mode
-  * remains behind SPARK_GRAFT_PLANMEMO_LEVEL). Serving a hit goes
+  * This memo caches a LOGICAL PLAN only — the optimizer's fixpoint
+  * output (see [[cached]]). Serving a hit goes
   * through [[PlanBridge.ofRows]], which builds a FRESH `Dataset` with
   * a fresh `QueryExecution`: analysis check, cache lookup, the
   * optimizer (a fast re-convergence over its own output), physical
@@ -58,26 +57,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object PlanMemo {
 
   private val debug = sys.env.contains("SPARK_GRAFT_PLANMEMO_DEBUG")
-
-  /** Which artifact the memo stores: "optimized" (round-22 default)
-    * or "analyzed" (the round-15..21 contract, via
-    * SPARK_GRAFT_PLANMEMO_LEVEL=analyzed). "optimized" additionally
-    * skips the per-call Catalyst OPTIMIZER fixpoint over the memoized
-    * subtree — still plan-preparation only, the prepared-statement
-    * contract one phase further: the served tree is rebuilt into a
-    * FRESH Dataset whose own QueryExecution re-runs analysis-check,
-    * cache lookup, the optimizer (now converging in one cheap
-    * iteration per batch on its own fixpoint output), physical
-    * planning, AQE, and every exchange, so each action still executes
-    * the entire query over the data; nothing result-shaped is stored.
-    * Motivation (round 22, measured): deep composed pipelines pay the
-    * optimizer per ACTION — q185's ~460 KB funnel tree cost 0.76 s
-    * per rep in optimization alone (PhaseSweep); with the optimized
-    * tree served it re-converges in ~30 ms (bench 0.885 -> 0.212 s).
-    * Equivalence: full 278/278 DuckDB hash match at sf0.001/sf0.01/
-    * sf0.1 with this level (round-22 sweeps), and the PlanMemoSpec
-    * miss/hit result-identity pins run under it in every sbt test. */
-  private val level = sys.env.getOrElse("SPARK_GRAFT_PLANMEMO_LEVEL", "optimized")
 
   private final case class Entry(plan: LogicalPlan)
 
@@ -178,7 +157,14 @@ object PlanMemo {
     } catch { case _: Exception => -1L }
   }
 
-  /** Wrap one query function with the plan memo. */
+  /** Wrap one query function with the plan memo. A job-free
+    * construction memoizes its OPTIMIZED plan, so a hit also skips the
+    * per-call optimizer fixpoint, yet is served as a fresh Dataset
+    * whose own QueryExecution re-runs analysis-check, the optimizer
+    * (one cheap iteration over its own fixpoint output), physical
+    * planning, AQE and every exchange (round 22: q185's optimization
+    * fell from 0.76 s per rep to ~30 ms; 278/278 hash match at
+    * sf0.001/sf0.01/sf0.1). */
   def cached(name: String, fn: (SparkSession, String) => DataFrame)
       : (SparkSession, String) => DataFrame = { (s, dir) =>
     val fp = fingerprint(dir)
@@ -206,10 +192,7 @@ object PlanMemo {
           val after = GraftScheduler.jobsSubmitted(s.sparkContext)
           if (after == before) {
             if (debug) System.err.println(s"[planmemo] memoize $name")
-            val plan =
-              if (level == "optimized") df.queryExecution.optimizedPlan
-              else df.queryExecution.analyzed
-            m.put(key, Entry(plan))
+            m.put(key, Entry(df.queryExecution.optimizedPlan))
           } else if (debug)
             System.err.println(s"[planmemo] impure $name ($before -> $after)")
           df

@@ -1255,46 +1255,46 @@ object Curation {
     * q37 (same shingles, signatures, band keys, Jaccard ≥ 0.5
     * verify) but the band join is new×old only: candidate volume is
     * |new| × collision rate, not corpus². Docs with no shingles get
-    * NULL band keys in both engines and are never candidates. */
+    * NULL band keys in both engines and are never candidates.
+    *
+    * Each execution derives every signature exactly once, with no
+    * cache (one dropped before the caller plans is re-derived per
+    * reference; one kept leaks an entry per call and dir): the new and
+    * old sides are disjoint `doc_id` filters that reach the scan, and
+    * one (b, bk) equi-join over the exploded band keys replaces the
+    * per-band union. The null-band filter sits above the `Generate`,
+    * where it cannot be pushed into (and re-hash) the shingle
+    * projection. Each row carries its shingle array through the join,
+    * so the verify needs no re-join to the signatures — the q48
+    * simhash trade of one payload copy per non-null band. A pair
+    * colliding in k bands is verified k times; the kill rule depends
+    * only on the pair, so `distinct` keeps the per-band union's
+    * result. */
   def q104IncrementalDedup(s: SparkSession, dir: String): DataFrame = {
-    val sig = Dedup.signaturesOf(docs(s, dir))
-      .select(col("doc_id") +: col("sh") +:
-        (0 until Dedup.NumBands).map(b => col(s"band$b")): _*)
-      .cache()
-    try {
-      val newSig = sig.filter(col("doc_id") % 10 >= 8)
-      val oldSig = sig.filter(col("doc_id") % 10 < 8)
-      val cand = (0 until Dedup.NumBands).map { b =>
-        // explicit null-band pruning before the exchange (NULL bands =
-        // zero-shingle docs; the engine-wide InferFilters exclusion
-        // means nothing else drops them) — result-neutral, audited by
-        // JoinKeyNullabilitySpec
-        newSig.select(col("doc_id").as("nid"), col(s"band$b").as("bk"))
-          .filter(col("bk").isNotNull)
-          .join(oldSig.select(col("doc_id").as("oid"), col(s"band$b").as("bk"))
-              .filter(col("bk").isNotNull),
-            "bk")
-          .select(col("nid"), col("oid"))
-      }.reduce(_ union _).distinct()
-      val kills = cand
-        .join(sig.select(col("doc_id").as("nid"), col("sh").as("sh_n")), "nid")
-        .join(sig.select(col("doc_id").as("oid"), col("sh").as("sh_o")), "oid")
-        // The kill rule never outputs the score, so the whole verify
-        // is ONE integer predicate carrying ONE array_intersect (a
-        // `jaccard` alias filter would be pushdown-inlined with the
-        // intersect duplicated — see Dedup.minhashPairsFrom). With
-        // i = |A∩B| and u = |A|+|B|−i ≥ 1 (banded candidates have
-        // non-empty shingle sets): i/u ≥ 1/2 ⟺ 2i ≥ |A|+|B|−i
-        // ⟺ 3i ≥ |A|+|B| — exact, zero float-boundary risk.
-        .filter(expr("3 * size(array_intersect(sh_n, sh_o)) >= " +
-          "size(sh_n) + size(sh_o)"))
-        .select(col("nid")).distinct()
-      docs(s, dir).filter(col("doc_id") % 10 >= 8)
-        .join(kills.withColumn("killed", lit(1)),
-          col("doc_id") === col("nid"), "left")
-        .select(col("doc_id"), coalesce(col("killed"), lit(0)).as("killed"))
-        .orderBy("doc_id")
-    } finally sig.unpersist()
+    val sig = Dedup.signaturesOf(docs(s, dir)).select(col("doc_id"), col("sh"),
+      array((0 until Dedup.NumBands).map(b => col(s"band$b")): _*).as("bands"))
+    def side(keep: Column, id: String, sh: String): DataFrame =
+      sig.filter(keep)
+        .select(col("doc_id").as(id), col("sh").as(sh),
+          posexplode(col("bands")).as(Seq("b", "bk")))
+        .filter(col("bk").isNotNull)
+    val kills = side(col("doc_id") % 10 >= 8, "nid", "sh_n")
+      .join(side(col("doc_id") % 10 < 8, "oid", "sh_o"), Seq("b", "bk"))
+      // The kill rule never outputs the score, so the whole verify
+      // is ONE integer predicate carrying ONE array_intersect (a
+      // `jaccard` alias filter would be pushdown-inlined with the
+      // intersect duplicated — see Dedup.minhashPairsFrom). With
+      // i = |A∩B| and u = |A|+|B|−i ≥ 1 (banded candidates have
+      // non-empty shingle sets): i/u ≥ 1/2 ⟺ 2i ≥ |A|+|B|−i
+      // ⟺ 3i ≥ |A|+|B| — exact, zero float-boundary risk.
+      .filter(expr("3 * size(array_intersect(sh_n, sh_o)) >= " +
+        "size(sh_n) + size(sh_o)"))
+      .select(col("nid")).distinct()
+    docs(s, dir).filter(col("doc_id") % 10 >= 8)
+      .join(kills.withColumn("killed", lit(1)),
+        col("doc_id") === col("nid"), "left")
+      .select(col("doc_id"), coalesce(col("killed"), lit(0)).as("killed"))
+      .orderBy("doc_id")
   }
 
   val q104Sql: String = {

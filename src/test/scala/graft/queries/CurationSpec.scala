@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
@@ -152,6 +153,131 @@ class CurationSpec extends SparkSuite {
       assert(killed > 0, "fixture contains near-dups of the old corpus")
       assert(killed < nNew, "not every new doc is a duplicate")
     } finally df.unpersist()
+  }
+
+  /** The per-band union form q104 had before its single-derivation
+    * rewrite, kept as the differential reference: one new×old join per
+    * band, unioned and deduplicated, then a verify re-join of each
+    * candidate pair to both sides' shingle sets. */
+  private def q104PerBandUnion(dir: String): DataFrame = {
+    val docs = graft.core.Tables.load(spark, dir, "documents")
+    val sig = Dedup.signaturesOf(docs)
+    val newSig = sig.filter(col("doc_id") % 10 >= 8)
+    val oldSig = sig.filter(col("doc_id") % 10 < 8)
+    val cand = (0 until Dedup.NumBands).map { b =>
+      newSig.select(col("doc_id").as("nid"), col(s"band$b").as("bk"))
+        .join(oldSig.select(col("doc_id").as("oid"), col(s"band$b").as("bk")), "bk")
+        .select(col("nid"), col("oid"))
+    }.reduce(_ union _).distinct()
+    val kills = cand
+      .join(sig.select(col("doc_id").as("nid"), col("sh").as("sh_n")), "nid")
+      .join(sig.select(col("doc_id").as("oid"), col("sh").as("sh_o")), "oid")
+      .filter(expr("3 * size(array_intersect(sh_n, sh_o)) >= " +
+        "size(sh_n) + size(sh_o)"))
+      .select(col("nid")).distinct()
+    docs.filter(col("doc_id") % 10 >= 8)
+      .join(kills.withColumn("killed", lit(1)), col("doc_id") === col("nid"), "left")
+      .select(col("doc_id"), coalesce(col("killed"), lit(0)).as("killed"))
+  }
+
+  /** A magic shingle: "mq1 mr 60mcqm" hashes to x with x mod P =
+    * −7919 / 1000003 mod P, where every one of the 16 affine hashes
+    * takes the same value v. Doc A = magic + "p28 q9" has bands 0 and
+    * 1 equal to v:v:v:v, doc B = magic + "p28 r0" has band 2 equal to
+    * it, no band position agrees, and |A∩B| / |A∪B| = 2/4 passes the
+    * verify: a join on the band key alone kills A, the per-band form
+    * does not. A is new doc 2398, B old doc 2397. */
+  private val crossBandPair =
+    Map(2398 -> "mq1 mr 60mcqm p28 q9", 2397 -> "mq1 mr 60mcqm p28 r0")
+
+  /** Writes a seeded 2,400-doc `documents.parquet` under `dir` (480 new
+    * docs) and returns the near-dup (new, new) pairs it planted. New
+    * docs are near-dups of old ones at 0–11 token substitutions (pairs
+    * sharing 1 to 4 bands, on both sides of the verify), exact copies,
+    * 0–2-token docs (NULL bands, on both sides), fresh docs, in-increment
+    * near-dup pairs and the [[crossBandPair]]. */
+  private def writeQ104Corpus(dir: String): Seq[(Long, Long)] = {
+    val rng = new scala.util.Random(104)
+    def words(n: Int) = Seq.fill(n)("w" + rng.nextInt(3000)).mkString(" ")
+    def short() = Seq("", "w7", "w7 w8")(rng.nextInt(3))
+    def mutate(t: String, k: Int) = {
+      val toks = t.split(" ")
+      (1 to k).foreach(_ => toks(rng.nextInt(toks.length)) = "x" + rng.nextInt(1 << 20))
+      toks.mkString(" ")
+    }
+    val n = 2400
+    val text = new Array[String](n)
+    val (newIds, oldIds) = (0 until n).partition(_ % 10 >= 8)
+    oldIds.foreach(id => text(id) = crossBandPair.getOrElse(id,
+      if (rng.nextInt(30) == 0) short() else words(16 + rng.nextInt(16))))
+    def anOld() = text(oldIds(rng.nextInt(oldIds.size)))
+    val pairs = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    newIds.foreach { id =>
+      text(id) = crossBandPair.getOrElse(id, rng.nextInt(10) match {
+        case 0 | 1 | 2 | 3 => mutate(anOld(), rng.nextInt(12))
+        case 4 => anOld()
+        case 5 => short()
+        case 6 | 7 if id % 10 == 9 && !crossBandPair.contains(id - 1) =>
+          pairs += ((id - 1L, id.toLong))
+          text(id - 1) = words(24)
+          mutate(text(id - 1), rng.nextInt(2))
+        case _ => words(16 + rng.nextInt(16))
+      })
+    }
+    spark.createDataFrame(text.indices.map(i => (i.toLong, text(i))))
+      .toDF("doc_id", "text").coalesce(1)
+      .write.parquet(s"$dir/documents.parquet")
+    pairs.toSeq
+  }
+
+  test("q104 matches the per-band union form on a synthetic corpus") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-q104").toString
+    try {
+      val pairs = writeQ104Corpus(dir)
+      val sig = Dedup.signaturesOf(graft.core.Tables.load(spark, dir, "documents"))
+      val isNew = col("doc_id") % 10 >= 8
+      // the corpus covers what it claims: NULL bands on both sides,
+      // new×old pairs sharing exactly 1, 2, 3 and 4 bands, and colliding
+      // in-increment pairs
+      assert(sig.filter(col("band0").isNull).groupBy(isNew).count().count() == 2)
+      val bandRows = sig.select(col("doc_id"),
+        posexplode(array((0 until Dedup.NumBands).map(b => col(s"band$b")): _*)))
+      val shared = bandRows.filter(isNew).select(col("doc_id").as("nid"), col("pos"), col("col"))
+        .join(bandRows.filter(!isNew).select(col("doc_id").as("oid"), col("pos"), col("col")),
+          Seq("pos", "col"))
+        .groupBy("nid", "oid").count()
+      assert(shared.select("count").distinct().collect().map(_.getLong(0)).toSet ==
+        Set(1L, 2L, 3L, 4L))
+      val inc = bandRows.select(col("doc_id").as("a"), col("pos"), col("col"))
+        .join(bandRows.select(col("doc_id").as("b"), col("pos"), col("col")), Seq("pos", "col"))
+        .join(spark.createDataFrame(pairs).toDF("a", "b"), Seq("a", "b"))
+        .select("a", "b").distinct()
+      val nInc = inc.count()
+      assert(nInc >= 10, s"$nInc of ${pairs.size} planted in-increment pairs share a band")
+
+      val got = Curation.q104IncrementalDedup(spark, dir)
+      val ref = q104PerBandUnion(dir)
+      val rows = got.collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
+      assert(rows.size == 480 && rows.map(_._1) == rows.map(_._1).sorted)
+      assert(rows.sorted == ref.collect().map(r => (r.getLong(0), r.getInt(1))).toSeq.sorted)
+      val killed = rows.collect { case (id, 1) => id }.toSet
+      assert(killed.size > 50 && killed.size < 480, s"${killed.size} killed")
+      // near-dups inside the increment never kill each other, and a
+      // collision on the band key at different band positions is not a
+      // candidate
+      assert(pairs.forall { case (a, b) => !killed(a) && !killed(b) })
+      assert(!killed(2398L), "the cross-band-position pair was a candidate")
+      info(s"${killed.size} of ${rows.size} new docs killed; $nInc of " +
+        s"${pairs.size} in-increment near-dup pairs share a band")
+
+      // no NULL band key reaches the band join's exchange
+      val w = JoinKeyAudit.walk("q104",
+        Curation.q104IncrementalDedup(spark, dir).queryExecution.optimizedPlan)
+      val (offenders, unprobeable) = JoinKeyAudit.probe(spark, w.pending,
+        scala.collection.mutable.Map.empty)
+      assert(offenders.isEmpty && unprobeable.isEmpty,
+        (offenders ++ unprobeable).mkString("\n"))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("q105 mix weights move the corpus to the declared target") {

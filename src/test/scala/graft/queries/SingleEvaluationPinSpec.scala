@@ -64,6 +64,25 @@ class SingleEvaluationPinSpec extends SparkSuite {
     }
   }
 
+  test("q104 derives each document's shingles once per execution") {
+    // One shingle projection per side (new, old) over three scans (the
+    // two sides and the increment the kills are joined back to). A
+    // signature cache unpersisted before the caller plans the query
+    // re-derives the shingles once per reference (a per-band union
+    // form read 18 md5 and 11 scans), and a null filter on a band
+    // column is pushed into the scan with the shingle alias inlined (a
+    // second evaluation per reference).
+    val p = graft.SparkEntry.queries("q104_incremental_dedup")(spark, dir)
+      .queryExecution.executedPlan.toString
+    val got = ("md5\\(".r.findAllIn(p).size,
+      "FileScan parquet".r.findAllIn(p).size)
+    assert(got === ((2, 3)),
+      s"q104 plan carries (md5, parquet scans) = $got, pinned (2, 3) — " +
+        "a signature cache dropped before execution re-derives the " +
+        "shingles per reference, or a null-band filter was inlined " +
+        "into the shingle projection")
+  }
+
   test("the converted queries keep their single-evaluation plan shapes") {
     // (Window, HashAggregate) counts of the verified post-conversion
     // plans. The regression each pin trips: q180 at 3 windows / q80 at

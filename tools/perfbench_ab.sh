@@ -13,11 +13,19 @@
 # once in each tree, alternating which tree runs first (SEC is
 # BENCHMARK.json's run_seconds). Every run's result line is appended to
 # AB_OUT (default: ab-<workload>.jsonl in the current directory); a run
-# that fails or prints nothing is recorded as an incorrect run. At the
-# end it prints, for each end-to-end metric, each side's median and
+# that fails or prints nothing is recorded as an incorrect run. Each
+# run's stderr is kept beside AB_OUT (<AB_OUT minus .jsonl>.stderr/
+# <side>-<seed>.log), and its line records the CPU steal ticks the host
+# took during the run (the change in /proc/stat's `steal` column). At
+# the end it prints, for each end-to-end metric, each side's median and
 # quartiles, how many pairs the change wins and ties, and whether the
 # change's median beats the parent's by more than the parent's
-# interquartile range; then the failed operations per side.
+# interquartile range; then each side's median over runs of every
+# operation's best `[perfbench] <op> <ms> ms` time (the untimed
+# `-verify` operations left out), so a moved metric can be traced to
+# the operation that moved it; then the steal ticks of every run, so
+# host noise can be told from a regression; then the failed operations
+# per side.
 #
 # It only reads what the benchmark prints; nothing under perfbench/ is
 # changed.
@@ -34,6 +42,8 @@ sha=$(git -C "$child" rev-parse --verify "$rev^{commit}")
 seconds=$(python3 -c 'import json,sys; print(json.load(open(sys.argv[1]))["run_seconds"])' "$child/BENCHMARK.json")
 parent=${AB_DIR:-$(mktemp -d "${TMPDIR:-/tmp}/perfbench-ab-parent.XXXXXX")}
 out=${AB_OUT:-$PWD/ab-$workload.jsonl}
+logs=${out%.jsonl}.stderr
+mkdir -p "$logs"
 
 if [ "$(cat "$parent/.ab_rev" 2>/dev/null)" != "$sha" ]; then
   mkdir -p "$parent"
@@ -42,13 +52,17 @@ if [ "$(cat "$parent/.ab_rev" 2>/dev/null)" != "$sha" ]; then
 fi
 echo "[ab] parent $sha in $parent; change $child; results in $out" >&2
 
+steal() { awk '$1 == "cpu" { print $9 }' /proc/stat; }
+
 # run <side> <tree> <seed>: one benchmark run, its result line tagged
 run() {
-  local line
+  local line err="$logs/$1-$3.log" s0
+  s0=$(steal)
   line=$(cd "$2" && python3 perfbench/run.py --workload "$workload" --seed "$3" \
-    --seconds "$seconds" --trace 0 | tail -n 1) || line=
+    --seconds "$seconds" --trace 0 2>"$err" | tail -n 1) || line=
   [ -n "$line" ] || line='{"correct": false, "attempted": 0, "failed": 0, "metrics": {}}'
-  printf '{"side": "%s", "seed": %s, "result": %s}\n' "$1" "$3" "$line" >>"$out"
+  printf '{"side": "%s", "seed": %s, "steal_ticks": %s, "stderr": "%s", "result": %s}\n' \
+    "$1" "$3" "$(($(steal) - s0))" "$err" "$line" >>"$out"
   echo "[ab] $1 seed $3: $line" >&2
 }
 
@@ -62,15 +76,16 @@ for ((i = 0; i < pairs; i++)); do
 done
 
 python3 - "$out" "$child/BENCHMARK.json" "$first" "$pairs" <<'EOF'
-import json, statistics, sys
+import json, re, statistics, sys
 
 path, contract, first, pairs = sys.argv[1], sys.argv[2], int(sys.argv[3]), int(sys.argv[4])
 seeds = set(range(first, first + pairs))
-runs = {}
+runs, tags = {}, {}
 for line in open(path):
     r = json.loads(line)
     if r["seed"] in seeds:
         runs[(r["side"], r["seed"])] = r["result"]
+        tags[(r["side"], r["seed"])] = r
 
 def quartiles(v):
     if len(v) < 2:
@@ -102,6 +117,33 @@ for m in json.load(open(contract))["end_to_end"]:
     print(f"{name:24} {pm:12.6g} [{p1:.6g}, {p3:.6g}]".ljust(60) +
           f" {cm:12.6g} [{c1:.6g}, {c3:.6g}]".ljust(35) +
           f" {wins:5d} {ties:5d} {n:5d}  {'yes' if gain else 'no'}")
+
+# each operation's best time per run, then the median over a side's runs
+op_line = re.compile(r"^\[perfbench\] (\S+) ([0-9.]+) ms$")
+best = {}
+for key, t in tags.items():
+    per_run = {}
+    try:
+        for l in open(t.get("stderr", "")):
+            m = op_line.match(l.strip())
+            if m and not m.group(1).endswith("-verify"):
+                per_run[m.group(1)] = min(per_run.get(m.group(1), 1e300), float(m.group(2)))
+    except OSError:
+        continue
+    for op, ms in per_run.items():
+        best.setdefault((key[0], op), []).append(ms)
+ops = sorted({op for _, op in best})
+if ops:
+    print(f"\n{'operation (best ms)':36} {'parent median':>14} {'change median':>14} {'change/parent':>14}")
+    for op in ops:
+        p, c = best.get(("parent", op)), best.get(("change", op))
+        pm = statistics.median(p) if p else float("nan")
+        cm = statistics.median(c) if c else float("nan")
+        print(f"{op:36} {pm:14.1f} {cm:14.1f} {cm / pm if p and c else float('nan'):14.3f}")
+print(f"\n{'seed':>8} {'parent steal ticks':>20} {'change steal ticks':>20}")
+for s in sorted(seeds):
+    st = [tags.get((side, s), {}).get("steal_ticks", "-") for side in ("parent", "change")]
+    print(f"{s:8d} {st[0]!s:>20} {st[1]!s:>20}")
 for side in ("parent", "change"):
     rs = [runs[(side, s)] for s in sorted(seeds) if (side, s) in runs]
     print(f"{side}: {len(rs)} runs, {sum(r.get('failed', 0) for r in rs)} failed operations, "

@@ -4,14 +4,17 @@ import java.nio.file.{Files, Paths}
 import graft.core.Sessions
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Under
+  * SPARK_GRAFT_VERIFY_ONLY both hold only the selected queries, so a
+  * compare of a subset run checks exactly that subset. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     new java.io.File(outDir).mkdirs()
     // local-iteration aid: SPARK_GRAFT_VERIFY_ONLY=q67,q68 dumps only the
-    // named queries (comma-separated name prefixes); absent = all (driver).
+    // named queries (comma-separated name prefixes) and their oracle SQL;
+    // absent = all (driver).
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     def selected(name: String): Boolean =
@@ -35,7 +38,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

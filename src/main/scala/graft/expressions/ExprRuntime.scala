@@ -5,9 +5,11 @@ import java.util.Base64
 import javax.crypto.Cipher
 import javax.crypto.spec.{IvParameterSpec, SecretKeySpec}
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.pipeline.Validator
+import graft.pipeline.{KeyService, Transforms, Validator}
 
 /** Static runtime for the custom Catalyst expressions — generated code
   * calls these via the object's static forwarders, so both the
@@ -213,4 +215,45 @@ object ExprRuntime {
       UTF8String.fromBytes(
         cipher.doFinal(Base64.getDecoder.decode(ct.toString)))
     } catch { case _: Exception => null }
+
+  // ------------------------------------------- export pipeline stages
+
+  private def str(s: UTF8String): String = if (s == null) null else s.toString
+  private def utf8(s: String): UTF8String = UTF8String.fromString(s)
+
+  /** [[EnvelopeFields]]: the envelope's `from_json` fields. */
+  def envelope(value: UTF8String): InternalRow = EnvelopeReader.read(value)
+
+  /** [[UnwrapKey]]: the record's data key; null on any failure. */
+  def unwrapKey(keys: KeyService, kek: UTF8String, encKey: UTF8String): UTF8String =
+    try utf8(keys.decryptKey(str(kek), str(encKey)))
+    catch { case _: Exception => null }
+
+  /** [[BusinessAudit]]: (lifted document, null) or (null, audit_failed). */
+  def businessAudit(decrypted: UTF8String, lastModified: UTF8String): InternalRow =
+    Transforms.businessAudit(str(decrypted), str(lastModified)) match {
+      case Right(doc) => new GenericInternalRow(Array[Any](utf8(doc), null))
+      case Left(_) => new GenericInternalRow(Array[Any](null, utf8("audit_failed")))
+    }
+
+  /** [[ValidateRecord]]: the document and manifest columns, or
+    * bad_decrypted; null for a null cell timestamp. */
+  def validate(snapshotType: String, decrypted: UTF8String, idJson: UTF8String,
+      ts: java.lang.Long, db: UTF8String, collection: UTF8String,
+      outer: UTF8String, inner: UTF8String): InternalRow =
+    if (ts == null) null
+    else Validator.validate(str(decrypted), str(idJson), ts, str(db),
+        str(collection), str(outer), str(inner), snapshotType) match {
+      case Right(v) =>
+        val m = v.manifest
+        new GenericInternalRow(Array[Any](utf8(v.doc), utf8(m.id), m.timestamp,
+          utf8(m.db), utf8(m.collection), utf8(m.source), utf8(m.outerSource),
+          utf8(m.innerSource), utf8(m.originalId), null))
+      case Left(_) => new GenericInternalRow(Array[Any](null, null, 0L, null,
+        null, null, null, null, null, utf8("bad_decrypted")))
+    }
+
+  /** [[EqualityWrap]]: `{"message": {...doc, "@type": inner}}`. */
+  def equalityWrap(doc: UTF8String, inner: UTF8String): UTF8String =
+    utf8(Transforms.equalityWrap(str(doc), str(inner)))
 }

@@ -2,19 +2,32 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.StringType
 
-/** Envelope ("Kafka wrapper") parsing: `from_json` with an explicit
-  * StructType + projection + mandatory-field skip side-channel —
-  * the Spark-first form of the reference's record-at-a-time Gson
+import graft.expressions.EnvelopeFields
+
+/** Envelope ("Kafka wrapper") parsing: one native `graft_envelope`
+  * expression + projection + mandatory-field skip side-channel — the
+  * Spark-first form of the reference's record-at-a-time Gson
   * extraction (app/batch/HBaseResultProcessor.kt:22-67).
   *
-  * `message._id` is dynamically shaped (object or scalar —
-  * images/hbase/hbase_data.py:85-96) and is declared as a StringType
-  * field: Spark's JacksonParser captures a non-string token under a
-  * StringType field as its raw JSON text, so the id needs no second
-  * `get_json_object` pass. The envelope JSON — the pipeline's widest
-  * column — is parsed EXACTLY ONCE per row.
+  * `graft_envelope(value)` ([[graft.expressions.EnvelopeFields]])
+  * returns exactly what `from_json(value, <envelope schema>)` returned
+  * for the fields the pipeline reads — outer `@type`; under `message`
+  * the `db`, `collection`, `@type`, `_id`, `_lastModifiedDateTime`,
+  * `encryption.{keyEncryptionKeyId, encryptedEncryptionKey,
+  * initialisationVector}` and `dbObject` — as the same struct shape,
+  * in one streaming Jackson pass over the value's UTF-8 bytes that
+  * skips every other field. Its `from_json` contract
+  * ([[graft.expressions.EnvelopeReader]]): Spark's own parser
+  * features (single quotes, `NaN`); the last of duplicate keys wins; a
+  * non-string token under a string field is its raw JSON text
+  * (`copyCurrentStructure`), so an object `message._id` needs no
+  * second pass; malformed JSON, a non-object root, or a `message` /
+  * `encryption` of the wrong type give Spark's partial or all-null
+  * result and an empty value NULL; invalid UTF-8 reads as U+FFFD, as
+  * through Spark's `InputStreamReader`.
   *
   * Skip semantics: rather than throwing per record
   * (MissingFieldException → Spring Batch skip,
@@ -26,26 +39,6 @@ import org.apache.spark.sql.types._
   * stays inside whole-stage codegen.
   */
 object Envelope {
-
-  val MessageSchema: StructType = StructType(Seq(
-    StructField("db", StringType),
-    StructField("collection", StringType),
-    StructField("@type", StringType),
-    StructField("_id", StringType), // raw JSON text (object or scalar)
-    StructField("_lastModifiedDateTime", StringType),
-    StructField("encryption", StructType(Seq(
-      StructField("keyEncryptionKeyId", StringType),
-      StructField("encryptedEncryptionKey", StringType),
-      StructField("initialisationVector", StringType)))),
-    StructField("dbObject", StringType)))
-
-  val EnvelopeSchema: StructType = StructType(Seq(
-    StructField("traceId", StringType),
-    StructField("unitOfWorkId", StringType),
-    StructField("@type", StringType),
-    StructField("message", MessageSchema),
-    StructField("version", StringType),
-    StructField("timestamp", StringType)))
 
   /** Topic `db.database.collection` → (database, collection)
     * (reference: app/utils/TextUtils.kt:7-8). */
@@ -77,7 +70,7 @@ object Envelope {
     // streaming export — collapsing 12 passes to 2 is measurable fixed
     // cost off each one (plan-construction altitude, not semantics)
     val withEnv = raw
-      .withColumn("env", from_json(col("value"), EnvelopeSchema))
+      .withColumn("env", ColumnBridge.of(col("value"))(e => EnvelopeFields(e.head)))
       .withColumns(scala.collection.immutable.ListMap(
         "id_json" ->
           expr("CAST(substring(hbase_id, 5, length(hbase_id) - 4) AS STRING)"),
@@ -99,7 +92,7 @@ object Envelope {
     // Mandatory-field check in the reference's order
     // (HBaseResultProcessor.kt:44-49). A malformed envelope, an
     // explicit-null / absent / non-object `message` all surface as a
-    // NULL message struct from the single from_json pass — the same
+    // NULL message struct from the single envelope pass — the same
     // set the reference's `getAsJsonObject("message")` throws on — so
     // bad-envelope detection needs no second parse of `value`.
     def missing(c: Column): Column = c.isNull || c === ""

@@ -1,23 +1,35 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+
+import graft.expressions.{AesCtrDecrypt, BusinessAudit, EqualityWrap, FilterFence, UnwrapKey, ValidateRecord}
 
 /** The end-to-end export pipeline, Spark-first:
   *
   * {{{
-  *   raw scan → Envelope.parse (from_json, columnar)
-  *            → decrypt (UDF over AES-CTR + per-executor key cache)
-  *            → businessAudit transform (gated UDF)
-  *            → validate/normalize (UDF over the Jackson tree rewrite)
+  *   raw scan → Envelope.parse (graft_envelope, columnar)
+  *            → decrypt (graft_unwrap_key over the per-executor key
+  *              cache, then graft_aes_ctr_decrypt)
+  *            → businessAudit transform (gated graft_business_audit)
+  *            → validate/normalize (graft_validate over the Jackson
+  *              tree rewrite)
   *            → sanitise (codegen'd column chain)
-  *            → equality transform (gated UDF)
+  *            → equality transform (gated graft_equality_wrap)
   * }}}
   *
   * mirroring the reference's composite ItemProcessor
   * (app/configuration/JobConfiguration.kt:71-76: HBaseResultProcessor →
   * DecryptionProcessor → SanitisationProcessor →
   * TransformationProcessor, with Validator inside decryption).
+  *
+  * Every stage is a native Catalyst expression
+  * (graft/expressions/ExportExpressions.scala) whose generated code
+  * calls the unchanged Scala stage function ([[Validator.validate]],
+  * [[Transforms]], the [[KeyService]]) through `ExprRuntime`: no
+  * `from_json`, no ScalaUDF. So building the pipeline resolves no UDF
+  * encoders, and the whole pipeline stays inside whole-stage codegen.
   *
   * Skip semantics as data, not exceptions: every stage carries an `err`
   * column forward (`missing:*`, `decrypt_failed`, `bad_decrypted`,
@@ -28,57 +40,40 @@ import org.apache.spark.sql.functions._
   * read from the data itself, never from accumulators (at-least-once on
   * task retry — SURVEY §7.4 risk 5).
   *
-  * Scale: decrypt + validate are per-row UDFs (crypto and JSON-tree
-  * recursion are opaque to Catalyst by nature); everything else is
-  * columnar and stays inside whole-stage codegen. No shuffle anywhere —
-  * the pipeline is embarrassingly parallel over source partitions, so
-  * it scales linearly with executors at 100 TB.
+  * Scale: no shuffle anywhere — the pipeline is embarrassingly
+  * parallel over source partitions, so it scales linearly with
+  * executors at 100 TB.
   */
 object ExportPipeline {
-
-  final case class DecryptOut(decrypted: String, err: String)
-  final case class ValidateOut(doc: String, m_id: String, m_ts: Long,
-      m_db: String, m_collection: String, m_source: String,
-      m_outer: String, m_inner: String, m_original_id: String, err: String)
 
   /** Decrypt stage (reference: DecryptionProcessor.kt:34-46), split
     * for the hot path:
     *  1. data-key unwrap via the (memoised, per-executor) KeyService —
-    *     a UDF, but amortized to a cache hit per distinct wrapped key;
-    *  2. the per-record AES-CTR decrypt via the NATIVE Catalyst
-    *     expression `graft_aes_ctr_decrypt` (codegen'd, no UDF boxing —
-    *     see [[graft.expressions.AesCtrDecrypt]]).
+    *     `graft_unwrap_key`, amortized to a cache hit per distinct
+    *     wrapped key; NULL on any failure;
+    *  2. the per-record AES-CTR decrypt via `graft_aes_ctr_decrypt`
+    *     (see [[graft.expressions.AesCtrDecrypt]]).
     * Any failure surfaces as NULL → `decrypt_failed`
     * (DecryptionFailureException semantics). */
-  def decrypt(parsed: DataFrame, keys: KeyService): DataFrame = {
-    graft.expressions.GraftFunctions.ensureRegistered(parsed.sparkSession)
-    val unwrapUdf = udf { (kekId: String, encKey: String) =>
-      try keys.decryptKey(kekId, encKey) catch { case _: Exception => null }
-    }
+  def decrypt(parsed: DataFrame, keys: KeyService): DataFrame =
     parsed
-      .withColumn("data_key",
-        when(col("err").isNull, unwrapUdf(col("kek_id"), col("enc_key"))))
-      .withColumn("decrypted",
-        when(col("err").isNull,
-          expr("graft_aes_ctr_decrypt(data_key, iv, db_object)")))
+      .withColumn("data_key", when(col("err").isNull,
+        ColumnBridge.of(col("kek_id"), col("enc_key"))(e => UnwrapKey(keys, e(0), e(1)))))
+      .withColumn("decrypted", when(col("err").isNull,
+        ColumnBridge.of(col("data_key"), col("iv"), col("db_object"))(e =>
+          AesCtrDecrypt(e(0), e(1), e(2)))))
       .withColumn("err", coalesce(col("err"),
         when(col("decrypted").isNull, "decrypt_failed")))
       .drop("data_key")
-  }
 
   /** businessAudit context lift, gated on (db, collection)
     * (reference: DecryptionProcessor.kt:47-49,59-73). */
   def auditTransform(df: DataFrame): DataFrame = {
-    val auditUdf = udf { (decrypted: String, lastModified: String) =>
-      Transforms.businessAudit(decrypted, lastModified) match {
-        case Right(doc) => DecryptOut(doc, null)
-        case Left(_) => DecryptOut(null, "audit_failed")
-      }
-    }
     val gate = col("err").isNull &&
       col("db") === Transforms.BusinessAuditDb &&
       col("collection") === Transforms.BusinessAuditCollection
-    df.withColumn("aud", when(gate, auditUdf(col("decrypted"), col("last_modified"))))
+    df.withColumn("aud", when(gate, ColumnBridge.of(col("decrypted"),
+        col("last_modified"))(e => BusinessAudit(e(0), e(1)))))
       .withColumns(scala.collection.immutable.ListMap(
         "decrypted" ->
           when(gate, col("aud.decrypted")).otherwise(col("decrypted")),
@@ -92,26 +87,15 @@ object ExportPipeline {
     * timestamp preference (Validator.kt:172-193): full → cell ts,
     * incremental → `_lastModifiedDateTime`-first with `createdDateTime`
     * fallback, each computed from the record's own fields. */
-  def validate(df: DataFrame, snapshotType: String = "full"): DataFrame = {
-    val validateUdf = udf { (decrypted: String, idJson: String, ts: Long,
-        db: String, collection: String, outer: String, inner: String) =>
-      Validator.validate(decrypted, idJson, ts, db, collection, outer, inner,
-        snapshotType) match {
-        case Right(v) => ValidateOut(v.doc, v.manifest.id, v.manifest.timestamp,
-          v.manifest.db, v.manifest.collection, v.manifest.source,
-          v.manifest.outerSource, v.manifest.innerSource,
-          v.manifest.originalId, null)
-        case Left(_) => ValidateOut(null, null, 0L, null, null, null, null,
-          null, null, "bad_decrypted")
-      }
-    }
+  def validate(df: DataFrame, snapshotType: String = "full"): DataFrame =
     // single withColumns pass for the struct expansion (was 10 chained
     // passes, each re-analyzing the whole pipeline tree — see
     // Envelope.parse for the per-micro-batch rationale)
     df.withColumn("val",
         when(col("err").isNull,
-          validateUdf(col("decrypted"), col("id_json"), col("ts"),
-            col("db"), col("collection"), col("outer_type"), col("inner_type"))))
+          ColumnBridge.of(col("decrypted"), col("id_json"), col("ts"),
+            col("db"), col("collection"), col("outer_type"),
+            col("inner_type"))(ValidateRecord(snapshotType, _))))
       .withColumns(scala.collection.immutable.ListMap(
         "doc" -> col("val.doc"),
         "m_id" -> col("val.m_id"),
@@ -124,7 +108,6 @@ object ExportPipeline {
         "m_original_id" -> col("val.m_original_id"),
         "err" -> coalesce(col("err"), col("val.err"))))
       .drop("val")
-  }
 
   /** Sanitisation: pure column chain (see [[Sanitise.sanitiseCol]]). */
   def sanitise(df: DataFrame): DataFrame =
@@ -136,13 +119,8 @@ object ExportPipeline {
     * (reference: TransformationProcessor.kt:21-46). */
   def equalityTransform(df: DataFrame, topic: String): DataFrame =
     if (topic != Transforms.EqualityTopic) df
-    else {
-      val wrapUdf = udf { (doc: String, inner: String) =>
-        Transforms.equalityWrap(doc, inner)
-      }
-      df.withColumn("doc",
-        when(col("err").isNull, wrapUdf(col("doc"), col("m_inner"))))
-    }
+    else df.withColumn("doc", when(col("err").isNull,
+      ColumnBridge.of(col("doc"), col("m_inner"))(e => EqualityWrap(e(0), e(1)))))
 
   /** Full pipeline over a raw scan DataFrame
     * (hbase_id binary, ts long, value string). */
@@ -154,12 +132,21 @@ object ExportPipeline {
       topic)
 
   /** Successfully exported records: the query-side view of the
-    * pipeline output (q41 and the specs). [[ExportJob]] does not use
-    * it; its writer takes the whole output ([[SnapshotWriter.export]]),
-    * because Catalyst's PushDownPredicates inlines this filter's `err`
-    * chain, and with it the decrypt and validate work, into the Filter. */
+    * pipeline output (q41, the writer queries, the streaming export
+    * and the specs). [[ExportJob]] does not use it; its writer takes the
+    * whole output ([[SnapshotWriter.export]]). The `err` column passes
+    * through `graft_fence` ([[graft.expressions.FilterFence]]) before
+    * the filter. Without it, Catalyst's PushDownPredicates would push
+    * the filter below the pipeline's projections with the whole `err`
+    * chain inlined (hundreds of copies of the envelope parse, and the
+    * unwrap, decrypt, audit and validate calls): each record would run
+    * the pipeline about three times, and the inlined Filter would
+    * outgrow the 64 KB limit of a generated method. With it, the
+    * pipeline runs once per record and the filter reads its `err`. */
   def records(pipelineOut: DataFrame): DataFrame =
-    pipelineOut.filter(col("err").isNull)
+    pipelineOut
+      .withColumn("err", ColumnBridge.of(col("err"))(e => FilterFence(e.head)))
+      .filter(col("err").isNull)
 
   /** Typed skip accounting, read from the data (not accumulators): the
     * query-side view (q41 and the specs). [[ExportJob]] takes the same

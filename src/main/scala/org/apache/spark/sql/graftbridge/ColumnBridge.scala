@@ -1,7 +1,7 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.IntegralDivide
+import org.apache.spark.sql.catalyst.expressions.{Expression, IntegralDivide}
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Column-level seam for Catalyst expressions the public `functions`
@@ -20,4 +20,12 @@ object ColumnBridge {
   def div(a: Column, b: Column): Column =
     ExpressionUtils.column(IntegralDivide(
       ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
+
+  /** A Column over the Catalyst expression `build` makes from `args`'
+    * expressions — for expressions that carry an object (the export's
+    * KeyService, its snapshot type) and so have no SQL function form,
+    * and for the export stages built without a function-registry
+    * lookup (see graft.expressions.ExportExpressions). */
+  def of(args: Column*)(build: Seq[Expression] => Expression): Column =
+    ExpressionUtils.column(build(args.map(ExpressionUtils.expression)))
 }

@@ -1,10 +1,22 @@
 package graft.pipeline
 
 import java.nio.file.{Files, Path}
+import java.security.MessageDigest
+import java.util.Base64
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.GraftScheduler
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Expression, JsonToStructs, ScalaUDF}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+
 import graft.SparkSuite
+import graft.expressions.{EnvelopeFields, UnwrapKey, ValidateRecord}
 import graft.pipeline.Completion._
 import graft.pipeline.Control.{CollectionStatus, ExportCompletionStatus, InMemoryStatusService, JobOutcome}
 
@@ -63,23 +75,36 @@ class ExportJobSpec extends SparkSuite {
   }
 
   /** Single-evaluation pin for the export. It guards against
-    * Catalyst's PushDownPredicates: fed `ExportPipeline.records(out)`,
-    * an `err IS NULL` filter, the writer's plan gets that filter pushed
-    * below the pipeline's projections with the whole `err` coalesce
-    * chain (from_json, the unwrap UDF, graft_aes_ctr_decrypt, the audit
-    * and validate UDFs) inlined into it, so the pipeline runs about
-    * three times per row; a separate `skipSummary(out)` action then
-    * reads the source a second time. Together that is four unwraps per
-    * record and two source passes. Fed the unfiltered output, with the
-    * skips counted in the sink, each record with a `dbObject` is
-    * unwrapped once and the source is read once. A rise in either
-    * count means a filter or a second action crept back. */
+    * Catalyst's PushDownPredicates: an unfenced `err IS NULL` filter
+    * over the pipeline output gets pushed below the pipeline's
+    * projections with the whole `err` chain (the envelope parse, the
+    * unwrap, graft_aes_ctr_decrypt, the audit and validate calls)
+    * inlined into it, so the pipeline runs about three times per row;
+    * a separate `skipSummary(out)` action then reads the source a
+    * second time. Together that is four unwraps per record and two
+    * source passes. Fed the unfiltered output, with the skips counted
+    * in the sink, each record with a `dbObject` is unwrapped once and
+    * the source is read once. A rise in either count means a filter or
+    * a second action crept back. */
   test("one ExportJob.run reads the source once and unwraps each record's key once") {
     val withDbObject = N - N / 100 // the MissingFieldSlot records never reach decrypt
     assert(clean.unwraps == withDbObject,
       s"${clean.unwraps} unwraps for $withDbObject records with a dbObject")
     assert(clean.recordsRead == N,
       s"the source was read ${clean.recordsRead.toDouble / N} times")
+  }
+
+  test("ExportPipeline.records runs the pipeline once per record: its filter is not pushed down") {
+    val n = 2000L
+    val before = ExportJobSpec.unwraps.sum
+    val recs = ExportPipeline.records(ExportPipeline.run(
+      Fixture.generate(spark, n, corrupt = true), Fixture.Topic,
+      new ExportJobSpec.CountingKeys(Fixture.keyService)))
+    recs.write.format("noop").mode("overwrite").save()
+    // one unwrap per record with a dbObject; a pushed-down filter
+    // re-derives `err` and unwraps about three times per record
+    assert(ExportJobSpec.unwraps.sum - before == n - n / 100)
+    assert(recs.count() == n - 3 * n / 100)
   }
 
   test("conservation: read = written + typed skips, with q41's seeded shares") {
@@ -106,6 +131,84 @@ class ExportJobSpec extends SparkSuite {
     assert(faulted.result.files.toSet == clean.result.files.toSet)
     assert(tree(faulted.outDir) == tree(clean.outDir))
     assert(tree(faulted.manDir) == tree(clean.manDir))
+  }
+
+  /** Pipeline output against the parent's from_json + ScalaUDF form
+    * ([[ExportJobSpec.UdfReference]]): same rows, both ways. */
+  private def assertSameAsUdfForm(raw: DataFrame, topic: String,
+      snapshotType: String): Unit = {
+    val keys = Fixture.keyService
+    val native = ExportPipeline.run(raw, topic, keys, snapshotType)
+    val udf = ExportJobSpec.UdfReference.run(raw, topic, keys, snapshotType)
+    assert(native.schema.map(f => (f.name, f.dataType)) ==
+      udf.schema.map(f => (f.name, f.dataType)))
+    val n = udf.count()
+    assert(native.count() == n && n > 0)
+    val (onlyNative, onlyUdf) = (native.exceptAll(udf), udf.exceptAll(native))
+    assert(onlyNative.isEmpty && onlyUdf.isEmpty,
+      s"$topic/$snapshotType: ${onlyNative.count()} rows only in the native pipeline, " +
+        s"${onlyUdf.count()} only in the UDF form; e.g. " +
+        onlyNative.take(2).mkString("; ") + " vs " + onlyUdf.take(2).mkString("; "))
+    // the comparison covered real skips and real documents
+    val outcomes = native.select(coalesce(col("err"), lit("ok"))).distinct()
+      .collect().map(_.getString(0)).toSet
+    assert(outcomes("ok"), s"$topic/$snapshotType: no record survived")
+  }
+
+  test("stages equal the parent's UDF forms: corrupt fixture, full and incremental") {
+    val raw = Fixture.generate(spark, 2000, corrupt = true)
+    assertSameAsUdfForm(raw, Fixture.Topic, "full")
+    assertSameAsUdfForm(raw, Fixture.Topic, "incremental")
+  }
+
+  test("stages equal the parent's UDF forms: businessAudit with good and missing context") {
+    val payloads = Seq(
+      """{"context":{"AUDIT_ID":"1","USER":"u"},"auditType":"T"}""",
+      """{"auditType":"T"}""",
+      """{"context":null,"auditType":"T"}""",
+      """{"context":"not an object","auditType":"T"}""",
+      """{"context":{"AUDIT_ID":"2"}}""",
+      """{"context":{"AUDIT_ID":"3","createdDateTime":"2015-03-20T12:23:25.183Z"},"auditType":"T"}""",
+      "[1, 2]", "{{{")
+    val raw = ExportJobSpec.auditCells(spark, payloads)
+      .unionByName(Fixture.generateBusinessAudit(spark, 1000, corrupt = true))
+    assertSameAsUdfForm(raw, "db.data.businessAudit", "full")
+    val skips = ExportPipeline.skipSummary(
+      ExportPipeline.run(raw, "db.data.businessAudit", Fixture.keyService))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(skips.getOrElse("audit_failed", 0L) >= 10L + 4L, s"audit skips: $skips")
+  }
+
+  test("stages equal the parent's UDF forms: the data.equality topic") {
+    assertSameAsUdfForm(Fixture.generateEquality(spark, 1000), Transforms.EqualityTopic, "full")
+  }
+
+  test("ExportJob.run's executed write plan holds no ScalaUDF and no JsonToStructs") {
+    val captured = mutable.ArrayBuffer.empty[QueryExecution]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        captured.synchronized { captured += qe }
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val (cfg, writerCfg, status, product, _, _, messaging, snsService) = harness()
+    spark.listenerManager.register(listener)
+    val result = try {
+      val r = ExportJob.run(spark, s => Fixture.generate(s, 1000, corrupt = true), cfg,
+        writerCfg, Fixture.keyService, status, product, messaging, snsService)
+      GraftScheduler.waitListenerBusEmpty(spark.sparkContext, 30000)
+      r
+    } finally spark.listenerManager.unregister(listener)
+    assert(result.outcome == JobOutcome(completed = true))
+    val exprs = captured.synchronized(captured.toVector)
+      .flatMap(qe => ExportJobSpec.planNodes(qe.executedPlan))
+      .flatMap(_.expressions).flatMap(_.collect { case e: Expression => e })
+    // positive control: the walk reaches the pipeline's expressions
+    assert(exprs.exists(_.isInstanceOf[EnvelopeFields]) &&
+      exprs.exists(_.isInstanceOf[UnwrapKey]) && exprs.exists(_.isInstanceOf[ValidateRecord]),
+      s"the write's executed plan was not reached (${captured.size} executions)")
+    assert(!exprs.exists(e => e.isInstanceOf[ScalaUDF] || e.isInstanceOf[JsonToStructs]),
+      exprs.filter(e => e.isInstanceOf[ScalaUDF] || e.isInstanceOf[JsonToStructs])
+        .map(_.prettyName).distinct.mkString(", "))
   }
 
   test("happy path: one snapshot-sender message per written file, counts + statuses land") {
@@ -196,5 +299,122 @@ object ExportJobSpec {
       inner.decryptKey(keyEncryptionKeyId, encryptedKey)
     }
     override def batchDataKey(): DataKeyResult = inner.batchDataKey()
+  }
+
+  /** Every node of an executed plan, through adaptive plans and their
+    * query stages. */
+  def planNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case s: QueryStageExec => s +: planNodes(s.plan)
+    case other => other +: other.children.flatMap(planNodes)
+  }
+
+  /** `data:businessAudit` envelopes around the given decrypted payloads. */
+  def auditCells(spark: org.apache.spark.sql.SparkSession,
+      payloads: Seq[String]): DataFrame = {
+    import spark.implicits._
+    val ks = Fixture.keyService
+    val dek = ks.batchDataKey().plaintextDataKey
+    val encKey = ks.encryptKey(Fixture.MasterKeyId, dek)
+    payloads.zipWithIndex.map { case (payload, i) =>
+      val iv = MessageDigest.getInstance("MD5").digest(s"audit-iv:$i".getBytes("UTF-8"))
+      val ct = Crypto.encrypt(dek, iv, payload.getBytes("UTF-8"))
+      val ivB64 = Base64.getEncoder.encodeToString(iv)
+      val value = s"""{"@type":"O","message":{"db":"data","collection":"businessAudit","_id":{"id":"a$i"},"@type":"I","_lastModifiedDateTime":"2018-12-14T15:01:02.000+0000","encryption":{"keyEncryptionKeyId":"${Fixture.MasterKeyId}","encryptedEncryptionKey":"$encKey","initialisationVector":"$ivB64"},"dbObject":"$ct"}}"""
+      (Array[Byte](0, 0, 0, 0) ++ s"""{"id":"a$i"}""".getBytes("UTF-8"), 1000L, value)
+    }.toDF("hbase_id", "ts", "value")
+  }
+
+  /** The parent's pipeline: `from_json` envelope parse
+    * ([[EnvelopeSpec.FromJsonReference]]) and ScalaUDF stages — the
+    * reference for the native stage expressions. */
+  object UdfReference {
+    final case class DecryptOut(decrypted: String, err: String)
+    final case class ValidateOut(doc: String, m_id: String, m_ts: Long,
+        m_db: String, m_collection: String, m_source: String,
+        m_outer: String, m_inner: String, m_original_id: String, err: String)
+
+    def decrypt(parsed: DataFrame, keys: KeyService): DataFrame = {
+      graft.expressions.GraftFunctions.ensureRegistered(parsed.sparkSession)
+      val unwrapUdf = udf { (kekId: String, encKey: String) =>
+        try keys.decryptKey(kekId, encKey) catch { case _: Exception => null }
+      }
+      parsed
+        .withColumn("data_key",
+          when(col("err").isNull, unwrapUdf(col("kek_id"), col("enc_key"))))
+        .withColumn("decrypted",
+          when(col("err").isNull,
+            expr("graft_aes_ctr_decrypt(data_key, iv, db_object)")))
+        .withColumn("err", coalesce(col("err"),
+          when(col("decrypted").isNull, "decrypt_failed")))
+        .drop("data_key")
+    }
+
+    def auditTransform(df: DataFrame): DataFrame = {
+      val auditUdf = udf { (decrypted: String, lastModified: String) =>
+        Transforms.businessAudit(decrypted, lastModified) match {
+          case Right(doc) => DecryptOut(doc, null)
+          case Left(_) => DecryptOut(null, "audit_failed")
+        }
+      }
+      val gate = col("err").isNull &&
+        col("db") === Transforms.BusinessAuditDb &&
+        col("collection") === Transforms.BusinessAuditCollection
+      df.withColumn("aud", when(gate, auditUdf(col("decrypted"), col("last_modified"))))
+        .withColumns(scala.collection.immutable.ListMap(
+          "decrypted" ->
+            when(gate, col("aud.decrypted")).otherwise(col("decrypted")),
+          "err" -> coalesce(col("err"), col("aud.err"))))
+        .drop("aud")
+    }
+
+    def validate(df: DataFrame, snapshotType: String): DataFrame = {
+      val validateUdf = udf { (decrypted: String, idJson: String, ts: Long,
+          db: String, collection: String, outer: String, inner: String) =>
+        Validator.validate(decrypted, idJson, ts, db, collection, outer, inner,
+          snapshotType) match {
+          case Right(v) => ValidateOut(v.doc, v.manifest.id, v.manifest.timestamp,
+            v.manifest.db, v.manifest.collection, v.manifest.source,
+            v.manifest.outerSource, v.manifest.innerSource,
+            v.manifest.originalId, null)
+          case Left(_) => ValidateOut(null, null, 0L, null, null, null, null,
+            null, null, "bad_decrypted")
+        }
+      }
+      df.withColumn("val",
+          when(col("err").isNull,
+            validateUdf(col("decrypted"), col("id_json"), col("ts"),
+              col("db"), col("collection"), col("outer_type"), col("inner_type"))))
+        .withColumns(scala.collection.immutable.ListMap(
+          "doc" -> col("val.doc"),
+          "m_id" -> col("val.m_id"),
+          "m_ts" -> col("val.m_ts"),
+          "m_db" -> col("val.m_db"),
+          "m_collection" -> col("val.m_collection"),
+          "m_source" -> col("val.m_source"),
+          "m_outer" -> col("val.m_outer"),
+          "m_inner" -> col("val.m_inner"),
+          "m_original_id" -> col("val.m_original_id"),
+          "err" -> coalesce(col("err"), col("val.err"))))
+        .drop("val")
+    }
+
+    def equalityTransform(df: DataFrame, topic: String): DataFrame =
+      if (topic != Transforms.EqualityTopic) df
+      else {
+        val wrapUdf = udf { (doc: String, inner: String) =>
+          Transforms.equalityWrap(doc, inner)
+        }
+        df.withColumn("doc",
+          when(col("err").isNull, wrapUdf(col("doc"), col("m_inner"))))
+      }
+
+    def run(raw: DataFrame, topic: String, keys: KeyService,
+        snapshotType: String): DataFrame =
+      equalityTransform(
+        ExportPipeline.sanitise(validate(auditTransform(
+          decrypt(EnvelopeSpec.FromJsonReference.parse(raw, topic), keys)),
+          snapshotType)),
+        topic)
   }
 }

@@ -36,15 +36,19 @@ private[queries] object ExpensiveSweep {
 
   /** Non-cheap expressions worth never paying twice per row: array-set
     * ops (O(n) with allocation), sorts, regex ops (automaton
-    * execution), JSON parsing, and the higher-order functions
-    * (per-element lambda interpretation). Matched by prettyName. */
+    * execution), JSON parsing, the higher-order functions
+    * (per-element lambda interpretation), and the export pipeline's
+    * stage expressions (a JSON parse, a key-service call, JSON tree
+    * rewrites). Matched by prettyName. */
   val Expensive = Set(
     "array_intersect", "array_union", "array_except", "array_distinct",
     "array_sort", "sort_array", "arrays_zip", "array_repeat",
     "regexp_extract_all", "regexp_extract", "regexp_replace",
     "regexp_count", "rlike", "from_json", "to_json", "str_to_map",
     "zip_with", "map_zip_with", "sentences", "aggregate", "transform",
-    "filter", "exists", "forall", "reduce")
+    "filter", "exists", "forall", "reduce",
+    "graft_envelope", "graft_unwrap_key", "graft_business_audit",
+    "graft_validate", "graft_equality_wrap")
 
   /** Every within-operator duplicate expensive call in `plan`:
     * (nodeName, prettyName, occurrence count, canonicalized call). */

@@ -35,59 +35,23 @@ class PipelinePlanSweepSpec extends SparkSuite {
   /** Adjudicated (query, prettyName) → accepted within-operator
     * duplicate counts, each with its argument.
     *
-    * THE EXPORT-PARSE FILTER (`from_json` × {2, 403}): the export
-    * queries' skip filter (`err.isNull`, Envelope.parse's chain) gets
-    * pushed below the parse Project with the alias chain inlined — the
-    * err `when`-chain references the parsed `message` struct hundreds
-    * of times, so the pushed Filter carries 403 IDENTICAL
-    * `from_json(message)` copies (plus 2 of the `@type` parse). Unlike
-    * the join-condition instances the round-17/18 restructurings
-    * removed (join conditions get NO runtime subexpression
-    * elimination), FilterExec/ProjectExec whole-stage codegen DOES
-    * subexpression-eliminate identical subexpressions: measured this
-    * round on a 300k-row 3-copy from_json Filter — 0.80 s with
-    * spark.sql.subexpressionElimination.enabled=true vs 1.61 s with it
-    * off, i.e. the 403 logical copies cost ONE parse per scanned row
-    * at runtime. The residual real cost is CROSS-operator (the pushed
-    * Filter parses once per scanned row, the Project above parses
-    * again per survivor ≈ 2× parse at ~zero attrition) — the same
-    * filter-vs-survivor cardinality trade pinned and accepted at
-    * q23/q148 in SingleEvaluationPinSpec, bounded at 2× of one stage.
-    *
     * THE VERSION PROJECT (`regexp_extract` × 5): the HFile/sorted-run
     * export summaries extract the record version from the raw cell
-    * value 5× within one Project — deduped by the same ProjectExec
+    * value 5× within one Project — deduped by ProjectExec's
     * subexpression elimination; bounded and cold (runs once per
-    * summary row, not per corpus row). */
-  /** The measured from_json copy-count in the pushed skip Filter.
-    * NOT a closed form: the pushed predicate inlines the err
-    * when-chain (Envelope.parse — `missing(x)` references each
-    * env-derived column twice, `blankToNull` doubles the db/collection
-    * references) PLUS the downstream validation chains above the
-    * filter, so the total is a property of the whole export plan, not
-    * of Envelope.scala alone. It is a deliberate re-adjudication
-    * tripwire: any envelope/validator schema edit that shifts the
-    * chain shifts this count and fails all nine parse-filtered
-    * queries at once — the failure message prints the NEW count per
-    * query; re-adjudicate by reading the envelope/validator diff that
-    * moved it, confirming the runtime cost story below still holds
-    * (FilterExec subexpression elimination collapses the copies to
-    * one parse per scanned row), and updating this constant. */
-  private val ParseFilterFromJsonCopies = 403
-
+    * summary row, not per corpus row).
+    *
+    * No export-parse entry: `ExportPipeline.records` fences its `err`
+    * column (`graft_fence`), so the skip filter is not pushed below the
+    * pipeline's projections with the `err` chain (hundreds of envelope
+    * parses) inlined; the stage expressions are in
+    * [[ExpensiveSweep.Expensive]], so such a Filter fails here. */
   private val Adjudicated: Map[(String, String), Set[Int]] = {
-    val parseFiltered = Set(
-      "q44_incremental_export", "q47_multiversion_export",
-      "q56_streaming_export", "q207_sortedrun_export",
-      "q209_sortedrun_writer", "q210_hfile_store", "q243_hfile_v3_store",
-      "q247_hfile_compaction", "q276_tombstone_export")
     val versionProjected = Set(
       "q47_multiversion_export", "q207_sortedrun_export",
       "q210_hfile_store", "q243_hfile_v3_store", "q247_hfile_compaction",
       "q276_tombstone_export")
-    parseFiltered.map(q =>
-      (q, "from_json") -> Set(2, ParseFilterFromJsonCopies)).toMap ++
-      versionProjected.map(q => (q, "regexp_extract") -> Set(5)).toMap
+    versionProjected.map(q => (q, "regexp_extract") -> Set(5)).toMap
   }
 
   test("pipeline/streaming internals never evaluate the same expensive call twice per row") {

@@ -10,7 +10,7 @@ fallback report of max abs diff when not). With --json, additionally
 writes a machine-readable per-query result file (the standing
 bench-scale full-hash sweep artifact, SWEEP_r{N}.json).
 """
-import sys, json, glob, os
+import atexit, glob, json, os, shutil, sys, tempfile
 import duckdb
 import pandas as pd
 import numpy as np
@@ -20,7 +20,28 @@ json_out = None
 if len(sys.argv) > 4 and sys.argv[3] == "--json":
     json_out = sys.argv[4]
 results = {}
+
+
+def mem_total_bytes():
+    with open("/proc/meminfo") as fh:
+        for line in fh:
+            if line.startswith("MemTotal:"):
+                return int(line.split()[1]) * 1024
+    return None
+
+
+# Bound DuckDB: by default it may take 80% of RAM, so one oracle that
+# cannot fit starves the whole (shared) host instead of failing alone.
+# Half of MemTotal, spilling into a temp dir of this run's own (under
+# $TMPDIR, removed at exit), keeps an oversized oracle to its own
+# DUCKDB ERROR line.
 con = duckdb.connect()
+mem = mem_total_bytes()
+if mem:
+    con.execute(f"SET memory_limit = '{max(mem // 2 // 2**20, 512)}MB'")
+spill = tempfile.mkdtemp(prefix="graft-compare-")
+atexit.register(shutil.rmtree, spill, ignore_errors=True)
+con.execute(f"SET temp_directory = '{spill}'")
 for p in glob.glob(f"{sfdir}/*.parquet"):
     name = os.path.basename(p)[:-8]
     con.sql(f"CREATE VIEW {name} AS SELECT * FROM '{p}'")

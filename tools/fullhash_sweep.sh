@@ -20,7 +20,10 @@
 # Usage: tools/fullhash_sweep.sh [sfDir...]
 #        (default: /root/testdata/sf0.001 /root/testdata/sf0.1)
 # Round number = latest CORRECTNESS_r{N} + 1 (the round in progress);
-# override with SWEEP_ROUND=N.
+# override with SWEEP_ROUND=N. An existing SWEEP_r{N}.json is never
+# overwritten unless SWEEP_ROUND names it. With SPARK_GRAFT_VERIFY_ONLY
+# set, Verify writes only the selected queries and their oracle SQL,
+# so the sweep checks exactly that subset.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -29,15 +32,21 @@ if [ "$#" -gt 0 ]; then
 else
   SF_DIRS=(/root/testdata/sf0.001 /root/testdata/sf0.1)
 fi
-OUT="$(mktemp -d /tmp/graft-sweep.XXXXXX)"
-trap 'rm -rf "$OUT"' EXIT
-
 if [ -z "${SWEEP_ROUND:-}" ]; then
   last=$(ls CORRECTNESS_r*.json 2>/dev/null |
     sed 's/.*_r0*\([0-9]*\)\.json/\1/' | sort -n | tail -1)
-  SWEEP_ROUND=$(( ${last:-0} + 1 ))
+  ARTIFACT=$(printf 'SWEEP_r%02d.json' $(( ${last:-0} + 1 )))
+  if [ -e "$ARTIFACT" ]; then
+    echo "[fullhash_sweep] $ARTIFACT exists; set SWEEP_ROUND to overwrite it" \
+      "or to write another round" >&2
+    exit 2
+  fi
+else
+  ARTIFACT=$(printf 'SWEEP_r%02d.json' "$SWEEP_ROUND")
 fi
-ARTIFACT=$(printf 'SWEEP_r%02d.json' "$SWEEP_ROUND")
+
+OUT="$(mktemp -d /tmp/graft-sweep.XXXXXX)"
+trap 'rm -rf "$OUT"' EXIT
 
 STATUS=0
 PARTS=()

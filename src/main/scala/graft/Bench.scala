@@ -122,7 +122,7 @@ object Bench {
   // under a worse machine state than drift credits; renormalize by
   // canary_pass_min["primary"] from the file artifact before
   // trusting per-query comparisons.
-  private[graft] val CanaryIters = 200000000L
+  private val CanaryIters = 200000000L
   /** Per-ITERATION anchors, so a retuned `CanaryIters` rescales the
     * reference seconds instead of silently corrupting `drift` and
     * every `*_norm` value (the ref/iters coupling is THROUGH these

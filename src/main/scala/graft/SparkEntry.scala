@@ -19,9 +19,10 @@ object SparkEntry {
   /** One entry per implemented operator from SURVEY.md §2.
     *
     * The declarative families go through [[graft.core.PlanMemo]] — a
-    * prepared-statement cache over the analyzed logical plan (repeat
-    * invocations skip DataFrame-API construction + eager re-analysis;
-    * optimization, planning, and execution still run per call, and a
+    * prepared-statement cache over the optimized logical plan (repeat
+    * invocations skip DataFrame-API construction and the optimizer
+    * fixpoint; analysis check, one cheap optimizer pass, planning and
+    * execution still run per call, and a
     * purity probe pins any query whose construction runs Spark jobs
     * as non-memoizable). The export pipeline and streaming families
     * are never wrapped: their fn IS the work (fixture generation,

@@ -56,8 +56,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object PlanMemo {
 
-  private val debug = sys.env.contains("SPARK_GRAFT_PLANMEMO_DEBUG")
-
   private final case class Entry(plan: LogicalPlan)
 
   private val memo = new java.util.WeakHashMap[
@@ -179,7 +177,6 @@ object PlanMemo {
       val m = perSession(s)
       m.get(key) match {
         case Entry(plan) =>
-          if (debug) System.err.println(s"[planmemo] hit $name")
           PlanBridge.ofRows(s, plan)
         case null =>
           // Probe EVERY call until one constructs job-free: a cold
@@ -190,11 +187,8 @@ object PlanMemo {
           val before = GraftScheduler.jobsSubmitted(s.sparkContext)
           val df = fn(s, dir)
           val after = GraftScheduler.jobsSubmitted(s.sparkContext)
-          if (after == before) {
-            if (debug) System.err.println(s"[planmemo] memoize $name")
+          if (after == before)
             m.put(key, Entry(df.queryExecution.optimizedPlan))
-          } else if (debug)
-            System.err.println(s"[planmemo] impure $name ($before -> $after)")
           df
       }
     }

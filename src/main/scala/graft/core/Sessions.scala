@@ -164,7 +164,7 @@ object Sessions {
       // one pass over the 278-query surface compiles ~4000 distinct
       // generated classes, so the LRU cycles completely and every
       // subsequent action recompiles every codegen stage from source
-      // (round 22, measured board-wide with graft.tools.PhaseSweep:
+      // (round 22, measured board-wide with the phase profiler:
       // 3940 Janino compilations in ONE warm pass; raising the cap
       // left 195 and cut the pass 134.6 -> 77.7 s, -42%, zero
       // regressions). This caches COMPILED CODE keyed on generated

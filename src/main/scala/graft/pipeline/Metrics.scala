@@ -3,7 +3,7 @@ package graft.pipeline
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.LongAdder
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd, StageInfo}
 import org.apache.spark.sql.SparkSession
 
 /** Observability surface mirroring the reference's Prometheus metrics
@@ -15,8 +15,8 @@ import org.apache.spark.sql.SparkSession
   *    DATA (writer accounting, skip summaries) — never from
   *    accumulators, which double-count under task retry
   *    (SURVEY §7.4 risk 5);
-  *  - executor-side effort (records read, bytes, task time, spills)
-  *    comes from a [[TaskMetricsListener]] on the standard
+  *  - executor-side effort (records read, bytes, task time, spills;
+  *    jobs and stages) comes from a [[TaskMetricsListener]] on the standard
   *    SparkListener bus — the engine-native replacement for
   *    hand-rolled per-thread counters;
   *  - [[MetricsRegistry.expositionFormat]] renders the Prometheus text
@@ -59,7 +59,8 @@ object Metrics {
   }
 
   /** Executor-effort metrics off the listener bus. Register with
-    * `spark.sparkContext.addSparkListener`, remove when done. */
+    * `spark.sparkContext.addSparkListener`, remove when done — or let
+    * [[instrumented]] do both and drain it. */
   final class TaskMetricsListener extends SparkListener {
     val recordsRead = new LongAdder
     val bytesRead = new LongAdder
@@ -68,6 +69,9 @@ object Metrics {
     val executorRunTimeMs = new LongAdder
     val memoryBytesSpilled = new LongAdder
     val tasksCompleted = new LongAdder
+    val jobsStarted = new LongAdder
+    /** Every completed stage, in completion order. */
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
 
     // Sentinel-drain state: the job group whose END signals that every
     // earlier event has been delivered to THIS listener (bus ordering
@@ -84,8 +88,11 @@ object Metrics {
       if (sentinelGroup != null && sentinelGroup == group) {
         sentinelJobId = jobStart.jobId
         jobStart.stageIds.foreach(id => sentinelStages.add(id))
-      }
+      } else jobsStarted.increment()
     }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      if (!sentinelStages.contains(e.stageInfo.stageId)) stages.add(e.stageInfo)
 
     override def onJobEnd(jobEnd: SparkListenerJobEnd): Unit =
       if (jobEnd.jobId == sentinelJobId && sentinelLatch != null)
@@ -112,6 +119,8 @@ object Metrics {
       reg.inc("graft_executor_run_time_ms_total", executorRunTimeMs.sum)
       reg.inc("graft_memory_bytes_spilled_total", memoryBytesSpilled.sum)
       reg.inc("graft_tasks_completed_total", tasksCompleted.sum)
+      reg.inc("graft_jobs_started_total", jobsStarted.sum)
+      reg.inc("graft_stages_completed_total", stages.size)
     }
   }
 
@@ -189,10 +198,12 @@ object Metrics {
     * bus delivers events to each listener in posting order, so when
     * our listener observes the sentinel's JobEnd every event `body`
     * produced has already been delivered. Bounded by a latch await —
-    * no sleep-poll, no wall-clock nondeterminism. */
-  def instrumented[A](spark: SparkSession)(body: MetricsRegistry => A): (A, MetricsRegistry) = {
+    * no sleep-poll, no wall-clock nondeterminism. Pass `listener` to
+    * read what the registry does not carry (its completed stages). */
+  def instrumented[A](spark: SparkSession,
+      listener: TaskMetricsListener = new TaskMetricsListener)(
+      body: MetricsRegistry => A): (A, MetricsRegistry) = {
     val reg = new MetricsRegistry
-    val listener = new TaskMetricsListener
     spark.sparkContext.addSparkListener(listener)
     try {
       val out = body(reg)

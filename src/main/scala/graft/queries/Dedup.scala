@@ -930,7 +930,11 @@ object Dedup {
 
   /** WITH-prefix ending in the bidirectional verified edge relation
     * `edges(d1, d2)` — the SQL twin of [[ccEdges]], shared by the
-    * degree (q79) and PageRank (q111) oracles. */
+    * degree (q79), PageRank (q111), triangle (q114), two-hop (q147)
+    * and k-core (q236) oracles. `MATERIALIZED` makes DuckDB build the
+    * edges once: inlined into each of q236's peel rounds, the band
+    * self-joins repeat and the oracle outgrows half of a 15 GB host at
+    * sf0.01. */
   private[queries] val edgesSqlCte: String = {
     val bandJoins = (0 until NumBands).map { bd =>
       s"""  SELECT a.doc_id AS d1, b.doc_id AS d2 FROM banded a JOIN banded b
@@ -945,7 +949,7 @@ object Dedup {
        |    CAST(len(list_distinct(list_concat(x.sh, y.sh))) AS DOUBLE) AS jaccard
        |  FROM cand JOIN banded x ON cand.d1 = x.doc_id
        |            JOIN banded y ON cand.d2 = y.doc_id),
-       |edges AS (SELECT d1, d2 FROM verified WHERE jaccard >= 0.5
+       |edges AS MATERIALIZED (SELECT d1, d2 FROM verified WHERE jaccard >= 0.5
        |  UNION ALL SELECT d2, d1 FROM verified WHERE jaccard >= 0.5)""".stripMargin
   }
 

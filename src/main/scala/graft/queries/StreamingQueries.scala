@@ -635,12 +635,7 @@ object StreamingQueries {
         .queryName(qname).outputMode("append").start()
       // one file per trigger: processAllAvailable drains BOTH replay
       // files as two micro-batches with state carried across them
-      try {
-        query.processAllAvailable()
-        if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
-          query.recentProgress.foreach(p =>
-            System.err.println(s"[q193] ${p.json}"))
-      } finally query.stop()
+      try query.processAllAvailable() finally query.stop()
     }
     val killed = s.table(qname).filter(col("earlier"))
       .select(col("doc_id")).distinct()

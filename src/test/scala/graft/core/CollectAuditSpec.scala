@@ -36,9 +36,6 @@ import org.scalatest.funsuite.AnyFunSuite
   *    bounded by sources × K.
   *  - `streaming/StreamingExport.scala` (2): per-micro-batch writer
   *    accounting (rows = files written that batch).
-  *  - `tools/PhaseSweep.scala` (1): the profiler's timed action — a
-  *    global count aggregate, one row by construction (mirrors
-  *    Dataset.count() through an observable QueryExecution).
   *
   * If this spec fails because you added a `.collect()`: either the
   * site is bounded by construction (a literal K, a files-written
@@ -69,8 +66,7 @@ class CollectAuditSpec extends AnyFunSuite {
       "queries/Similarity.scala" -> 6,
       "queries/StreamingQueries.scala" -> 3,
       "queries/TextAnalysis.scala" -> 1,
-      "streaming/StreamingExport.scala" -> 2,
-      "tools/PhaseSweep.scala" -> 1)
+      "streaming/StreamingExport.scala" -> 2)
     val collectCall = raw"\.collect\(\)".r
     val found = scalaSources().flatMap { p =>
       val n = collectCall.findAllMatchIn(read(p)).size
@@ -83,7 +79,7 @@ class CollectAuditSpec extends AnyFunSuite {
         s"removed: ${(pinned.toSet -- found.toSet).toSeq.sorted}. " +
         "Adjudicate boundedness in this spec's scaladoc table, or " +
         "make the operator distributed.")
-    assert(found.values.sum === 22) // the ledger total the notes cite
+    assert(found.values.sum === 21) // the ledger total the notes cite
   }
 
   test("no unbounded driver-materialization spellings in src/main") {

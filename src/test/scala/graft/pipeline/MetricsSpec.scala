@@ -40,6 +40,14 @@ class MetricsSpec extends SparkSuite {
     assert(Files.readString(target).contains("graft_tasks_completed_total"))
   }
 
+  test("jobs, stages and tasks count the body's work, not the drain's sentinel job") {
+    val (_, reg) = Metrics.instrumented(spark)(_ =>
+      spark.sparkContext.parallelize(1 to 10, 2).count())
+    assert(reg.counter("graft_jobs_started_total") === 1)
+    assert(reg.counter("graft_stages_completed_total") === 1)
+    assert(reg.counter("graft_tasks_completed_total") === 2)
+  }
+
   test("gauges and repeated counter increments") {
     val reg = new Metrics.MetricsRegistry
     reg.inc("c", 2); reg.inc("c", 3)
